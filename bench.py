@@ -256,7 +256,9 @@ def run_scaling_worker(cpus: int, prep_dir: str) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from geo_import_spark.session import default_cpus
+
+    cpus = default_cpus()
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     if "--scaling" in sys.argv:

@@ -48,17 +48,6 @@ def _spread_bits(v: np.ndarray) -> np.ndarray:
     return v
 
 
-def _compact_bits(v: np.ndarray) -> np.ndarray:
-    """Inverse of _spread_bits."""
-    v = v.astype(np.uint64) & _M1
-    v = (v | (v >> np.uint64(1))) & _M2
-    v = (v | (v >> np.uint64(2))) & _M4
-    v = (v | (v >> np.uint64(4))) & _M8
-    v = (v | (v >> np.uint64(8))) & _M16
-    v = (v | (v >> np.uint64(16))) & np.uint64(0x00000000FFFFFFFF)
-    return v
-
-
 def lonlat_to_xy(lon: np.ndarray, lat: np.ndarray, level: int):
     """Grid coordinates (x east, y south) at `level`; clipped to grid."""
     n = np.int64(1) << np.int64(level)
@@ -91,22 +80,71 @@ def morton_key(cell: np.ndarray) -> np.ndarray:
     return ((np.asarray(level).astype(np.uint64) << LEVEL_SHIFT) | m).astype(np.int64)
 
 
-def cell_col(lon, lat, level: int):
+def _grid_sql(v: str, n: str, lat: bool) -> str:
+    """SQL mirror of lonlat_to_xy on one axis: the clipped grid index
+    of the SQL expression `v` with `n` cells per axis (same double
+    arithmetic, so the same bits)."""
+    g = f"(90D - ({v})) / 180D" if lat else f"(({v}) + 180D) / 360D"
+    return f"greatest(least(floor({g} * {n}), {n} - 1), 0)"
+
+
+def _cell_sql(x: str, y: str, level) -> str:
+    """SQL cell id from grid indices: level << 58 | x << 29 | y, with
+    `level` an int or an integer SQL expression."""
+    base = f"{level << 58}L" if isinstance(level, int) else f"shiftleft(cast({level} as bigint), 58)"
+    return f"{base} + shiftleft({x}, 29) + {y}"
+
+
+def cell_col(lon: str, lat: str, level: int):
     """JVM column expression for the cell id of (lon, lat) at `level`
     — identical arithmetic to cell_encode, kept inside whole-stage
-    codegen (the point side of the PIP join never leaves the JVM)."""
+    codegen (the point side of the PIP join never leaves the JVM).
+    `lon`/`lat` are SQL expressions, usually column names; the
+    expression is built as one SQL string because every PySpark
+    Column operator costs driver-side round trips."""
     from pyspark.sql import functions as F
 
-    n = 1 << level
-    x = F.floor((lon + 180.0) / 360.0 * n).cast("long")
-    y = F.floor((90.0 - lat) / 180.0 * n).cast("long")
-    x = F.greatest(F.least(x, F.lit(n - 1)), F.lit(0))
-    y = F.greatest(F.least(y, F.lit(n - 1)), F.lit(0))
-    return (
-        F.lit(level << 58).cast("long")
-        + F.shiftleft(x, 29).cast("long")
-        + y
-    ).alias(f"cell_l{level}")
+    n = str(1 << level)
+    x = _grid_sql(lon, n, lat=False)
+    y = _grid_sql(lat, n, lat=True)
+    return F.expr(_cell_sql(x, y, level)).alias(f"cell_l{level}")
+
+
+def cover_level_col(minx: str, miny: str, maxx: str, maxy: str, base_level: int, max_cells: int):
+    """JVM mirror of covering_bbox's level choice: the finest level
+    <= base_level whose bbox grid cover has <= max_cells cells, else
+    level 1 (identical double arithmetic and clipping, so it picks the
+    NumPy level bit-for-bit). The bbox arguments are SQL expressions,
+    usually column names. One lambda over the candidate levels, so
+    the expression stays small whatever base_level is."""
+    from pyspark.sql import functions as F
+
+    n = "shiftleft(1L, _lv)"
+    nx = f"({_grid_sql(maxx, n, False)} - {_grid_sql(minx, n, False)} + 1)"
+    ny = f"({_grid_sql(miny, n, True)} - {_grid_sql(maxy, n, True)} + 1)"
+    fits = f"filter(sequence(1, {base_level}), _lv -> {nx} * {ny} <= {max_cells})"
+    return F.expr(f"cast(coalesce(array_max({fits}), 1) as int)")
+
+
+def cover_col(minx: str, miny: str, maxx: str, maxy: str, level):
+    """JVM column expression: array<long> of the cell ids covering the
+    bbox at `level` (an int, or an integer SQL expression such as the
+    name of a cover_level_col column); the bbox arguments are SQL
+    expressions, usually column names. A nested sequence/transform
+    over cell_col's clipped grid formula, in covering_bbox's order
+    (rows north to south, each row west to east), so it equals
+    covering_bbox's cells bit-for-bit. A null bbox gives a null array
+    (explode drops it)."""
+    from pyspark.sql import functions as F
+
+    n = str(1 << level) if isinstance(level, int) else f"shiftleft(1L, {level})"
+    xs = f"sequence({_grid_sql(minx, n, False)}, {_grid_sql(maxx, n, False)})"
+    ys = f"sequence({_grid_sql(maxy, n, True)}, {_grid_sql(miny, n, True)})"
+    cells = f"flatten(transform({ys}, _cy -> transform({xs}, _cx -> {_cell_sql('_cx', '_cy', level)})))"
+    # greatest/least skip nulls, so the grid formula alone would turn a
+    # null bbox into the grid's last cell
+    known = " AND ".join(f"({v}) IS NOT NULL" for v in (minx, miny, maxx, maxy))
+    return F.expr(f"CASE WHEN {known} THEN {cells} END")
 
 
 def cell_encode(lon: np.ndarray, lat: np.ndarray, level: int) -> np.ndarray:

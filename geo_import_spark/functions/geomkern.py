@@ -30,8 +30,6 @@ the reference's per-row JS walkers:
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 
 GEOM_TYPES = ("Point", "LineString", "Polygon", "MultiPoint", "MultiLineString", "MultiPolygon")
@@ -115,14 +113,6 @@ def unflatten_to_geojson(gtype, part_offsets, ring_offsets, xs, ys):
             out.append([ring(i) for i in range(part_offsets[p], part_offsets[p + 1])])
         return out
     raise ValueError(gtype)
-
-
-def geojson_to_flat(geom_json: str):
-    """Parse one GeoJSON geometry object string -> flat tuple or None."""
-    g = json.loads(geom_json)
-    if g is None:
-        return None
-    return (g["type"],) + flatten_geojson_coords(g["type"], g.get("coordinates"))
 
 
 def fix_semantics(gtype, part_offsets, ring_offsets, xs, ys):
@@ -365,9 +355,3 @@ def points_in_single_polygon(
             xint = (e2x - e1x) * (ppy - e1y) / (e2y - e1y) + e1x
         crossings += np.sum(cond & (ppx < xint), axis=1)
     return (crossings % 2).astype(bool)
-
-
-def vertex_counts(row_offsets: np.ndarray) -> np.ndarray:
-    """Per-row vertex count from row offsets (reference soql/*.js
-    vertexCount; guard vs maxVerticesPerRow)."""
-    return (row_offsets[1:] - row_offsets[:-1]).astype(np.int64)

@@ -58,12 +58,6 @@ def shingles_of_tokens(toks, n: int = NGRAM):
     return F.array_distinct(F.coalesce(grams, F.array().cast("array<string>")))
 
 
-def shingles_col(text_col, n: int = NGRAM):
-    """Distinct word n-grams of a text column — convenience form over
-    shingles_of_tokens (one regex scan; see its docstring)."""
-    return shingles_of_tokens(tokens_col(text_col), n)
-
-
 def ngram_jaccard_pairs(
     documents: DataFrame,
     threshold: float = 0.2,

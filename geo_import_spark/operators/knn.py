@@ -117,7 +117,7 @@ def radius_join(
     arithmetic) or haversine meters (`haversine=True`).
     """
     pts = points.select(point_key, "lon", "lat").withColumn(
-        "cell_id", cellmod.cell_col(F.col("lon"), F.col("lat"), level)
+        "cell_id", cellmod.cell_col("lon", "lat", level)
     )
     disk = make_disk_cells_udf(level, radius, haversine)
     cand = (
@@ -166,7 +166,7 @@ def knn_join(
     ck_pen = LoopCheckpointer(checkpoint_dir, name="pending")
 
     pts = points.select(point_key, "lon", "lat").withColumn(
-        "cell_id", cellmod.cell_col(F.col("lon"), F.col("lat"), level)
+        "cell_id", cellmod.cell_col("lon", "lat", level)
     )
     pts.cache()
     sy = 180.0 / (1 << level)  # cell height in degrees (the tighter axis)

@@ -5,8 +5,8 @@ polygon layers (the vector-overlay operation the north rule's
 Plan shape (the scale story, mirroring the PIP join's):
 
 1. Candidate generation NEVER compares all pairs: each polygon's bbox
-   is covered with fixed-level quadtree cells (functions/cells.py
-   packing) via pure JVM sequence-explodes, and the two layers
+   is covered with fixed-level quadtree cells (cells.cover_col, a
+   pure JVM expression, exploded), and the two layers
    equi-join on cell_id — one shuffle keyed by cell, pruned by a
    fused strict bbox-overlap filter, then pair-dedup.
 2. Exact refinement clips the subject ring(s) against the clip
@@ -36,24 +36,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geo_import_spark.functions import cells as cellmod
+
 COORD_SCALE = 2_000_000.0  # half-micro lattice: int = x * 2e6 (EDGE_EPS*2e6 = 0.9 -> see corpus)
 CROSS_TO_DEG2 = 2.0 * COORD_SCALE * COORD_SCALE  # cross_sum -> area in deg^2
 OVERLAY_LEVEL = 3  # 45-degree cells: hot 200x140-deg polygon covers ~20
-
-
-def _cover_cells(df: DataFrame, minx, miny, maxx, maxy, level: int) -> DataFrame:
-    """Fixed-level quadtree cover of each row's bbox — JVM sequence +
-    two explodes (both layers must share the level for the equi-join,
-    so no adaptive coarsening here; `level` bounds the fan-out)."""
-    n = 1 << level
-    gx = lambda v: F.greatest(F.least(F.floor((v + 180.0) / 360.0 * n).cast("long"), F.lit(n - 1)), F.lit(0))  # noqa: E731
-    gy = lambda v: F.greatest(F.least(F.floor((90.0 - v) / 180.0 * n).cast("long"), F.lit(n - 1)), F.lit(0))  # noqa: E731
-    df = df.withColumn("cx", F.explode(F.sequence(gx(minx), gx(maxx))))
-    df = df.withColumn("cy", F.explode(F.sequence(gy(maxy), gy(miny))))
-    return df.withColumn(
-        "cell_id",
-        F.lit(level << 58).cast("long") + F.shiftleft(F.col("cx"), 29) + F.col("cy"),
-    ).drop("cx", "cy")
 
 
 def _clip_ring(ring, minx, miny, maxx, maxy):
@@ -173,8 +160,12 @@ def overlay_join(clips: DataFrame, subjects: DataFrame,
         F.array_max("geom.xs").alias("b_maxx"),
         F.array_max("geom.ys").alias("b_maxy"),
     )
-    ac = _cover_cells(a, F.col("a_minx"), F.col("a_miny"), F.col("a_maxx"), F.col("a_maxy"), level)
-    bc = _cover_cells(b, F.col("b_minx"), F.col("b_miny"), F.col("b_maxx"), F.col("b_maxy"), level)
+    # both layers share the fixed level (the equi-join needs it), so
+    # no adaptive coarsening here; `level` bounds the fan-out
+    ac = a.withColumn("cell_id", F.explode(
+        cellmod.cover_col("a_minx", "a_miny", "a_maxx", "a_maxy", level)))
+    bc = b.withColumn("cell_id", F.explode(
+        cellmod.cover_col("b_minx", "b_miny", "b_maxx", "b_maxy", level)))
     cand = (
         ac.join(bc, "cell_id")
         .filter(

@@ -4,29 +4,33 @@ The reference has no spatial join at all (SURVEY.md §2.4); this is the
 new engine's core physical strategy (§4.2.1-2):
 
   1. polygons -> bbox (JVM-side array_min/max) -> adaptive quadtree cell
-     covering (pandas UDF; per-polygon level chosen so |cover| <= max_cells,
-     bounding candidate blow-up) -> explode to (cell_id, poly)
+     covering, all JVM expressions: cells.cover_level_col picks each
+     polygon's level so |cover| <= max_cells (bounding candidate
+     blow-up) and cells.cover_col builds the cell array -> explode to
+     (cell_id, poly)
   2. points -> cell id at every level present in the polygon covering
      (usually 2-4 levels) -> explode
   3. equi-join on cell_id (hash/sort-merge; cell ids are Morton codes so
      range partitioning is spatial partitioning), AQE skew-join as the
      backstop for hot cells, optional explicit salting
-  4. exact even-odd ray-cast refinement in a vectorized pandas UDF;
-     polygon rings reach the Python workers via sc.broadcast (one copy
-     per executor) and each Arrow batch groups candidates by poly_id,
-     so Python-bridge bytes are O(candidates) + O(polygons) — never
-     O(pairs x vertices)
+  4. exact even-odd ray-cast refinement in one vectorized pandas UDF
+     body (_refine): each Arrow batch groups candidates by poly_id and
+     casts all of a polygon's points at once. Broadcast mode reads the
+     rings from an sc.broadcast (one copy per executor), so
+     Python-bridge bytes are O(candidates) + O(polygons) — never
+     O(pairs x vertices); shuffle mode reads them from joined columns
   5. rectangle fast path (broadcast mode): polygons whose even-odd
      interior IS their bbox are flagged once at collect time; the JVM
      decides strictly-interior candidates inside whole-stage codegen
-     and the Arrow UDF skips the ray cast for them (single point-side
+     and the refine skips the ray cast for them (single point-side
      pass — no union re-scan). Boundary candidates and non-rectangular
      polygons keep the exact ray cast, so results are bit-identical
      to the pure-UDF plan
 
 Scale notes (100 TB): the shuffle key is cell_id — bounded fan-out on
 both sides (points x |levels|, polys x max_cells). The physical plan
-is AUTO-SELECTED by a one-job size estimate of the polygon side:
+is AUTO-SELECTED by a one-job size estimate of the polygon side
+(which also collects its distinct cover levels):
 within the broadcast budget the point side is never shuffled at all;
 beyond it the shuffle join is chosen — the driver never collects an
 unbounded polygon side. Hot cells (a city cell holding millions of
@@ -81,135 +85,63 @@ def release_ring_broadcasts() -> int:
             pass
     return n
 
-COVER_TYPE = T.StructType(
-    [
-        T.StructField("cells", T.ArrayType(T.LongType())),
-        T.StructField("level", T.IntegerType()),
-    ]
-)
 
+def _refine(lon: pd.Series, lat: pd.Series, poly_id: pd.Series, decided: np.ndarray, ring_of) -> pd.Series:
+    """The refine body of both plans: exact even-odd ray cast of one
+    Arrow batch of (point, polygon) candidates. Rows already decided
+    by the JVM rectangle fast path are accepted as they are; the rest
+    are grouped by poly_id so each polygon's edge arrays are built
+    once (geomkern.points_in_single_polygon). ring_of(poly_id, row)
+    returns that polygon's (ring_offsets, xs, ys), or None."""
+    from geo_import_spark.functions.geomkern import points_in_single_polygon
 
-def make_covering_udf(base_level: int, max_cells: int):
-    @pandas_udf(COVER_TYPE)
-    def covering(minx: pd.Series, miny: pd.Series, maxx: pd.Series, maxy: pd.Series) -> pd.DataFrame:
-        out_cells, out_level = [], []
-        for a, b, c, d in zip(minx.values, miny.values, maxx.values, maxy.values):
-            if np.isnan(a):
-                out_cells.append([])
-                out_level.append(base_level)
-                continue
-            cover, lv = cellmod.covering_bbox(a, b, c, d, base_level, max_cells)
-            out_cells.append(cover.tolist())
-            out_level.append(lv)
-        return pd.DataFrame({"cells": out_cells, "level": out_level})
-
-    return covering
-
-
-def make_cell_udf(level: int):
-    @pandas_udf(T.LongType())
-    def cell_at(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(cellmod.cell_encode(lon.values, lat.values, level))
-
-    return cell_at
-
-
-@pandas_udf(T.BooleanType())
-def pip_contains(
-    lon: pd.Series, lat: pd.Series, ring_offsets: pd.Series, xs: pd.Series, ys: pd.Series
-) -> pd.Series:
-    """Vectorized even-odd ray cast over a batch of (point, polygon)
-    candidate pairs. Ragged polygon arrays are concatenated into flat
-    ndarrays (Arrow-offset style) and reduced per candidate row."""
-    n = len(lon)
-    if n == 0:
-        return pd.Series([], dtype=bool)
-    ro_list = ring_offsets.values
-    xs_list = xs.values
-    ys_list = ys.values
-    nrings_per_row = np.array([len(r) - 1 for r in ro_list], dtype=np.int64)
-    ring_row = np.repeat(np.arange(n), nrings_per_row)
-    # per-row coordinate lengths; shift each row's ring offsets by the
-    # running coordinate base to form batch-global ring offsets
-    coord_lens = np.array([len(v) for v in xs_list], dtype=np.int64)
-    base = np.concatenate([[0], np.cumsum(coord_lens)[:-1]])
-    ring_offsets_flat = np.concatenate(
-        [np.asarray(r[1:], dtype=np.int64) + b for r, b in zip(ro_list, base)]
-    ) if n else np.array([], dtype=np.int64)
-    ring_offsets_flat = np.concatenate([[0], ring_offsets_flat])
-    flat_xs = np.concatenate(xs_list) if n else np.array([])
-    flat_ys = np.concatenate(ys_list) if n else np.array([])
-    from geo_import_spark.functions.geomkern import batch_point_in_polygon
-
-    res = batch_point_in_polygon(
-        lon.values.astype(np.float64),
-        lat.values.astype(np.float64),
-        ring_row,
-        ring_offsets_flat,
-        flat_xs,
-        flat_ys,
-    )
+    res = decided.copy()
+    todo = np.flatnonzero(~res)
+    if todo.size == 0:
+        return pd.Series(res)
+    px = lon.to_numpy(np.float64)[todo]
+    py = lat.to_numpy(np.float64)[todo]
+    codes, uniques = pd.factorize(poly_id.to_numpy()[todo], sort=False)
+    order = np.argsort(codes, kind="stable")
+    for idx in np.split(order, np.flatnonzero(np.diff(codes[order])) + 1):
+        code = codes[idx[0]]
+        geom = ring_of(uniques[code], todo[idx[0]]) if code >= 0 else None
+        if geom is not None:
+            res[todo[idx]] = points_in_single_polygon(px[idx], py[idx], *geom)
     return pd.Series(res)
 
 
-def polygon_covering(polygons: DataFrame, base_level: int = 13, max_cells: int = 64) -> DataFrame:
-    """polygons(poly_id, geom) -> (poly_id, cell_id, level, bbox)
-    exploded cover. The bbox rides along so the join can prune
-    candidates JVM-side before the exact ray cast."""
-    covering_udf = make_covering_udf(base_level, max_cells)
-    boxed = polygons.select(
-        "poly_id",
-        F.array_min("geom.xs").alias("minx"),
-        F.array_min("geom.ys").alias("miny"),
-        F.array_max("geom.xs").alias("maxx"),
-        F.array_max("geom.ys").alias("maxy"),
-    ).withColumn("cover", covering_udf("minx", "miny", "maxx", "maxy"))
-    return boxed.select(
-        "poly_id",
-        "minx", "miny", "maxx", "maxy",
-        F.col("cover.level").alias("level"),
-        F.explode("cover.cells").alias("cell_id"),
-    )
-
-
-def make_pip_bcast_udf(rings_bc):
-    """pandas UDF over (lon, lat, poly_id, bbox_exact) candidates:
-    polygon rings come from a Spark broadcast (one copy per executor,
-    NOT one copy per candidate pair). Within an Arrow batch,
-    candidates are grouped by poly_id so each polygon's edge arrays
-    are built once. Rows pre-decided by the JVM rectangle fast path
-    (bbox_exact=True) are accepted without touching the ray cast —
-    the plan stays ONE point-side pass (no union re-scan), bridge
-    bytes stay O(candidates), and ray-cast CPU drops to the
-    non-rectangle / boundary remainder."""
+def _pip_broadcast_udf(rings_bc):
+    """Broadcast-mode refine: rings come from a Spark broadcast (one
+    copy per executor), so the bridge carries O(candidates) bytes;
+    `exact` marks the rows the rectangle fast path already accepted."""
 
     @pandas_udf(T.BooleanType())
-    def contains(
-        lon: pd.Series, lat: pd.Series, poly_id: pd.Series, bbox_exact: pd.Series
-    ) -> pd.Series:
-        from geo_import_spark.functions.geomkern import points_in_single_polygon
-
-        n = len(lon)
-        if n == 0:
-            return pd.Series([], dtype=bool)
-        res = bbox_exact.fillna(False).values.astype(bool).copy()
-        todo = np.nonzero(~res)[0]
-        if todo.size == 0:
-            return pd.Series(res)
-        px = lon.values[todo].astype(np.float64)
-        py = lat.values[todo].astype(np.float64)
-        codes, uniques = pd.factorize(poly_id.values[todo], sort=False)
+    def contains(lon: pd.Series, lat: pd.Series, poly_id: pd.Series, exact: pd.Series) -> pd.Series:
         polys = rings_bc.value
-        for j, pid in enumerate(uniques):
-            geom = polys.get(pid)
-            if geom is None:
-                continue
-            ro, xs, ys = geom
-            idx = np.nonzero(codes == j)[0]
-            res[todo[idx]] = points_in_single_polygon(px[idx], py[idx], ro, xs, ys)
-        return pd.Series(res)
+        decided = exact.fillna(False).to_numpy(bool)
+        return _refine(lon, lat, poly_id, decided, lambda pid, _row: polys.get(pid))
 
     return contains
+
+
+@pandas_udf(T.BooleanType())
+def _pip_joined_rings(
+    lon: pd.Series, lat: pd.Series, poly_id: pd.Series,
+    ring_offsets: pd.Series, xs: pd.Series, ys: pd.Series,
+) -> pd.Series:
+    """Shuffle-mode refine: each candidate row carries its polygon's
+    rings as joined columns; the first row of a poly_id group serves
+    the whole group."""
+
+    def ring_of(_pid, row):
+        return (
+            np.asarray(ring_offsets.iat[row], dtype=np.int64),
+            np.asarray(xs.iat[row], dtype=np.float64),
+            np.asarray(ys.iat[row], dtype=np.float64),
+        )
+
+    return _refine(lon, lat, poly_id, np.zeros(len(lon), dtype=bool), ring_of)
 
 
 COVER_ROW_SCHEMA = T.StructType(
@@ -248,63 +180,55 @@ def _is_exact_bbox(ro: np.ndarray, xs: np.ndarray, ys: np.ndarray) -> bool:
     return all(xs[i] == xs[i + 1] or ys[i] == ys[i + 1] for i in range(4))
 
 
-def _collect_rings_and_cover(polygons: DataFrame, base_level: int, max_cells: int):
-    """ONE driver collect of the polygon side, from which BOTH the
-    rings dict (for the sc.broadcast ray cast) and the exploded cell
-    cover rows are derived — the cover math (cells.covering_bbox) runs
-    on the driver, fine by definition: broadcast mode is only chosen
-    when the polygon side fits the broadcast budget.
+def _covered(polygons: DataFrame, base_level: int, max_cells: int) -> DataFrame:
+    """The polygon side, prepared once per pip_join call: one row per
+    polygon with poly_id, its rings (ring_offsets, xs, ys), bbox,
+    cover level (cells.cover_level_col) and cover cells
+    (cells.cover_col) — JVM expressions only; each query on it prunes
+    the columns it does not read. An empty polygon has a null bbox
+    and null cells, so exploding its cells yields no row."""
+    box = ("minx", "miny", "maxx", "maxy")
+    return (
+        polygons.select(
+            "poly_id",
+            F.col("geom.ring_offsets").alias("ring_offsets"),
+            F.col("geom.xs").alias("xs"),
+            F.col("geom.ys").alias("ys"),
+            F.array_min("geom.xs").alias("minx"),
+            F.array_min("geom.ys").alias("miny"),
+            F.array_max("geom.xs").alias("maxx"),
+            F.array_max("geom.ys").alias("maxy"),
+        )
+        .withColumn("level", cellmod.cover_level_col(*box, base_level, max_cells))
+        .withColumn("cells", cellmod.cover_col(*box, "level"))
+    )
+
+
+def _collect_rings_and_cover(covered: DataFrame):
+    """ONE driver collect of the prepared polygon side (_covered). The
+    driver only flattens the JVM-computed cell arrays into cover rows
+    and flags exact rectangles — fine by definition, since broadcast
+    mode is only chosen when the polygon side fits the broadcast
+    budget.
 
     Returns (rings: dict poly_id -> (ring_offsets, xs, ys),
              cover_rows: list of COVER_ROW_SCHEMA tuples,
              levels: sorted distinct cover levels)."""
-    rows = polygons.select(
-        "poly_id",
-        F.col("geom.ring_offsets").alias("ro"),
-        F.col("geom.xs").alias("xs"),
-        F.col("geom.ys").alias("ys"),
-    ).collect()
     rings: dict = {}
     cover_rows: list = []
     levels: set = set()
-    for r in rows:
+    for r in covered.collect():
+        ro = np.asarray(r["ring_offsets"], dtype=np.int64)
         xs = np.asarray(r["xs"], dtype=np.float64)
         ys = np.asarray(r["ys"], dtype=np.float64)
-        rings[r["poly_id"]] = (np.asarray(r["ro"], dtype=np.int64), xs, ys)
-        if xs.size == 0:
+        rings[r["poly_id"]] = (ro, xs, ys)
+        if not r["cells"]:
             continue
-        minx, maxx = float(xs.min()), float(xs.max())
-        miny, maxy = float(ys.min()), float(ys.max())
-        cover, lv = cellmod.covering_bbox(minx, miny, maxx, maxy, base_level, max_cells)
-        levels.add(int(lv))
-        rect = _is_exact_bbox(np.asarray(r["ro"], dtype=np.int64), xs, ys)
-        for cid in cover.tolist():
-            cover_rows.append(
-                (r["poly_id"], minx, miny, maxx, maxy, int(lv), cid, rect)
-            )
+        levels.add(r["level"])
+        head = (r["poly_id"], r["minx"], r["miny"], r["maxx"], r["maxy"], r["level"])
+        rect = _is_exact_bbox(ro, xs, ys)
+        cover_rows.extend((*head, cid, rect) for cid in r["cells"])
     return rings, cover_rows, sorted(levels)
-
-
-def _cover_level_col(minx, miny, maxx, maxy, base_level: int, max_cells: int):
-    """JVM mirror of cells.covering_bbox's level choice: the finest
-    level <= base_level whose bbox grid cover has <= max_cells cells
-    (identical double arithmetic + clipping => bit-identical to the
-    NumPy path). Lets the shuffle join probe the distinct cover levels
-    with a pure-JVM aggregate — no covering UDF pass, no persist."""
-
-    def ncells(lv: int):
-        n = 1 << lv
-        def grid(v, flip: bool):
-            g = F.floor(((90.0 - v) if flip else (v + 180.0)) / (180.0 if flip else 360.0) * n).cast("long")
-            return F.greatest(F.least(g, F.lit(n - 1)), F.lit(0))
-        nx = grid(maxx, False) - grid(minx, False) + 1
-        ny = grid(miny, True) - grid(maxy, True) + 1
-        return nx * ny
-
-    expr = F.when(ncells(base_level) <= max_cells, base_level)
-    for lv in range(base_level - 1, 1, -1):
-        expr = expr.when(ncells(lv) <= max_cells, lv)
-    return expr.otherwise(1).cast("int")
 
 
 # Auto-salting knobs (shuffle mode): a cell is "hot" when it exceeds
@@ -329,7 +253,7 @@ def auto_salt_factor(points: DataFrame, level: int) -> int:
     """
     import math
 
-    cell = cellmod.cell_col(F.col("lon"), F.col("lat"), level)
+    cell = cellmod.cell_col("lon", "lat", level)
     counts = points.groupBy(cell.alias("cell_id")).agg(
         F.count("*").alias("n")
     )
@@ -342,19 +266,28 @@ def auto_salt_factor(points: DataFrame, level: int) -> int:
     return max(1, min(MAX_AUTO_SALT, s))
 
 
+def _side_stats(covered: DataFrame):
+    """One column-pruned aggregate job over the prepared polygon side
+    (_covered): (n_polys, estimated broadcast bytes, sorted distinct
+    cover levels of the non-empty polygons)."""
+    row = covered.agg(
+        F.count("*").alias("n"),
+        F.sum(F.size("xs")).alias("verts"),
+        F.collect_set(F.when(F.col("minx").isNotNull(), F.col("level"))).alias("levels"),
+    ).collect()[0]
+    n = row["n"] or 0
+    verts = row["verts"] or 0
+    return n, n * _POLY_OVERHEAD_BYTES + verts * 16, sorted(row["levels"])
+
+
 def estimate_polygon_side_bytes(polygons: DataFrame) -> tuple[int, int]:
     """(n_polys, estimated broadcast bytes) for the polygon side — one
     column-pruned aggregate job: rows x fixed overhead + vertices x 16
     bytes (two float64 per vertex). Drives the auto broadcast/shuffle
     plan choice; deliberately conservative (counts cover + dict + Row
     overhead per polygon)."""
-    row = polygons.agg(
-        F.count("*").alias("n"),
-        F.sum(F.size("geom.xs")).alias("verts"),
-    ).collect()[0]
-    n = row["n"] or 0
-    verts = row["verts"] or 0
-    return n, n * _POLY_OVERHEAD_BYTES + verts * 16
+    n, est, _ = _side_stats(_covered(polygons, 13, 64))
+    return n, est
 
 
 def pip_join(
@@ -373,12 +306,13 @@ def pip_join(
 
     broadcast_polys="auto" (default): ONE column-pruned aggregate
     estimates the polygon side (rows x overhead + vertices x 16 bytes)
-    and picks broadcast iff it fits broadcast_budget_bytes — the
+    and collects its distinct cover levels, and picks broadcast iff
+    the estimate fits broadcast_budget_bytes — the
     driver never collects an unbounded polygon side. The choice is
     logged. True/False force a path (tests / operator override).
 
-    broadcast mode: the polygon side — cover cells AND ring
-    coordinates — is collected ONCE and shipped per executor
+    broadcast mode: the polygon side — JVM-computed cover cells AND
+    ring coordinates — is collected ONCE and shipped per executor
     (local-relation broadcast join + sc.broadcast rings). The Python
     bridge then carries only (lon, lat, poly_id) per candidate: bytes
     are O(candidates) + O(polygons), never O(pairs x vertices).
@@ -386,9 +320,9 @@ def pip_join(
     shuffle mode: the at-scale fallback when the polygon side exceeds
     the broadcast budget — shuffle join on cell_id (AQE skew-join /
     explicit salting) with polygon coords joined per candidate. The
-    distinct-levels probe is a pure-JVM aggregate (_cover_level_col),
-    so nothing is persisted and the covering UDF runs exactly once,
-    inside the join's execution.
+    cover is exploded from cells.cover_col inside the join's
+    execution, so nothing is persisted and the only Python stage is
+    the refine.
 
     salt_factor=None (default) is MEASURED in shuffle mode: one
     histogram aggregate (auto_salt_factor — the hot_cells diagnostic
@@ -399,54 +333,39 @@ def pip_join(
     point-side shuffle to skew.
     """
     spark = points.sparkSession
+    empty = points.select(*point_cols).limit(0).withColumn("poly_id", F.lit(""))
+    covered = _covered(polygons, base_level, max_cells)
 
-    if broadcast_polys == "auto":
-        n_polys, est_bytes = estimate_polygon_side_bytes(polygons)
-        broadcast_polys = est_bytes <= broadcast_budget_bytes
-        log.info(
-            "pip_join auto plan: polygon side ~%d bytes (%d polys) -> %s",
-            est_bytes, n_polys, "broadcast" if broadcast_polys else "shuffle",
-        )
+    if broadcast_polys == "auto" or not broadcast_polys:
+        # One aggregate sizes the polygon side AND collects its
+        # distinct cover levels (all the shuffle plan needs from it).
+        n_polys, est_bytes, levels = _side_stats(covered)
+        if broadcast_polys == "auto":
+            broadcast_polys = est_bytes <= broadcast_budget_bytes
+            log.info(
+                "pip_join auto plan: polygon side ~%d bytes (%d polys) -> %s",
+                est_bytes, n_polys, "broadcast" if broadcast_polys else "shuffle",
+            )
 
     if broadcast_polys:
-        rings, cover_rows, levels = _collect_rings_and_cover(
-            polygons, base_level, max_cells
-        )
+        rings, cover_rows, levels = _collect_rings_and_cover(covered)
         if not cover_rows:
-            return points.select(*point_cols).limit(0).withColumn("poly_id", F.lit(""))
+            return empty
         cover = F.broadcast(spark.createDataFrame(cover_rows, COVER_ROW_SCHEMA))
     else:
-        # Distinct cover levels via the JVM mirror of covering_bbox's
-        # level choice — an aggregate over bboxes only (no cell
-        # explode, no pandas UDF, nothing persisted).
-        lv_rows = (
-            polygons.select(
-                F.array_min("geom.xs").alias("minx"),
-                F.array_min("geom.ys").alias("miny"),
-                F.array_max("geom.xs").alias("maxx"),
-                F.array_max("geom.ys").alias("maxy"),
-            )
-            .filter(F.col("minx").isNotNull())
-            .select(
-                _cover_level_col(
-                    F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-                    base_level, max_cells,
-                ).alias("level")
-            )
-            .distinct()
-            .collect()
-        )
-        levels = sorted({r["level"] for r in lv_rows})
         if not levels:
-            return points.select(*point_cols).limit(0).withColumn("poly_id", F.lit(""))
-        cover = polygon_covering(polygons, base_level, max_cells)
+            return empty
+        cover = covered.select(
+            "poly_id", "minx", "miny", "maxx", "maxy",
+            F.explode("cells").alias("cell_id"),
+        )
 
     # Point side stays 100% JVM (cells.cell_col — whole-stage codegen):
     # one scan, explode over the distinct cover levels (usually 2-4).
     pts = points.select(*point_cols, "lon", "lat")
     pts_cells = pts.withColumn(
         "cell_id",
-        F.explode(F.array(*[cellmod.cell_col(F.col("lon"), F.col("lat"), lv) for lv in levels])),
+        F.explode(F.array(*[cellmod.cell_col("lon", "lat", lv) for lv in levels])),
     )
 
     if not broadcast_polys and salt_factor is None:
@@ -470,7 +389,7 @@ def pip_join(
     # JVM-side bbox pre-filter kills most false candidates inside
     # whole-stage codegen; only bbox-passing pairs reach the Python
     # ray cast (for convex/rectangular polygons that's ~the hit set).
-    cand0 = pts_cells.join(cover, join_keys).filter(
+    cand = pts_cells.join(cover, join_keys).filter(
         (F.col("lon") >= F.col("minx")) & (F.col("lon") <= F.col("maxx"))
         & (F.col("lat") >= F.col("miny")) & (F.col("lat") <= F.col("maxy"))
     )
@@ -491,18 +410,12 @@ def pip_join(
             (F.col("lon") > F.col("minx")) & (F.col("lon") < F.col("maxx"))
             & (F.col("lat") > F.col("miny")) & (F.col("lat") < F.col("maxy"))
         )
-        cand = cand0.select(
-            *point_cols, "lon", "lat", "poly_id",
-            (F.col("is_rect") & strict).alias("bbox_exact"),
-        )
         rings_bc = spark.sparkContext.broadcast(rings)
         _RING_BROADCASTS.append(rings_bc)
-        refined = cand.filter(
-            make_pip_bcast_udf(rings_bc)("lon", "lat", "poly_id", "bbox_exact")
+        contains = _pip_broadcast_udf(rings_bc)(
+            "lon", "lat", "poly_id", F.col("is_rect") & strict
         )
-        return refined.select(*point_cols, "poly_id")
-
-    cand = cand0.select(*point_cols, "lon", "lat", "poly_id")
+        return cand.filter(contains).select(*point_cols, "poly_id")
 
     polys_geom = polygons.select(
         "poly_id",
@@ -510,51 +423,7 @@ def pip_join(
         F.col("geom.xs").alias("xs"),
         F.col("geom.ys").alias("ys"),
     )
-    refined = cand.join(polys_geom, "poly_id").filter(
-        pip_contains("lon", "lat", "ring_offsets", "xs", "ys")
-    )
-    return refined.select(*point_cols, "poly_id")
-
-
-def pip_join_prebucketed(
-    points: DataFrame,
-    polygons: DataFrame,
-    level: int,
-    point_cols: tuple[str, ...] = ("doc_id", "span_offset"),
-) -> DataFrame:
-    """PIP against a SPATIALLY CO-LOCATED point table: `points` carries
-    a stored `cell_id` at a fixed `level` (cells.cell_col) and was
-    written bucketed by it (plans/bucketed.write_bucketed), so the
-    cell equi-join needs NO point-side Exchange — at 100 TB the point
-    table never shuffles across repeated PIP queries; only the
-    polygon cover (orders of magnitude smaller) repartitions to match
-    the bucket layout. The pay-once spatial twin of the bucketed
-    doc_id joins.
-
-    Tradeoff vs pip_join's adaptive cover: the cover is forced to the
-    layout's fixed level, so continent-sized polygons fan out to more
-    cover cells (bounded by their bbox area at `level`) instead of
-    climbing to a coarser level. Semantics are identical — strict bbox
-    prefilter + exact even-odd ray cast (tests compare against
-    pip_join's broadcast plan row-for-row).
-    """
-    # force every polygon's cover to the layout's level: a cover cell
-    # budget of a full level-`level` grid can never bind
-    cover = polygon_covering(polygons, base_level=level,
-                             max_cells=(1 << level) ** 2 * 2)
-    cand = points.select(*point_cols, "lon", "lat", "cell_id").join(
-        cover, "cell_id"
-    ).filter(
-        (F.col("lon") >= F.col("minx")) & (F.col("lon") <= F.col("maxx"))
-        & (F.col("lat") >= F.col("miny")) & (F.col("lat") <= F.col("maxy"))
-    ).select(*point_cols, "lon", "lat", "poly_id")
-    polys_geom = polygons.select(
-        "poly_id",
-        F.col("geom.ring_offsets").alias("ring_offsets"),
-        F.col("geom.xs").alias("xs"),
-        F.col("geom.ys").alias("ys"),
-    )
-    refined = cand.join(polys_geom, "poly_id").filter(
-        pip_contains("lon", "lat", "ring_offsets", "xs", "ys")
-    )
-    return refined.select(*point_cols, "poly_id")
+    refined = cand.select(*point_cols, "lon", "lat", "poly_id").join(polys_geom, "poly_id")
+    return refined.filter(
+        _pip_joined_rings("lon", "lat", "poly_id", "ring_offsets", "xs", "ys")
+    ).select(*point_cols, "poly_id")

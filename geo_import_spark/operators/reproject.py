@@ -109,22 +109,3 @@ def reproject_layers(assigned: DataFrame) -> DataFrame:
     else:
         out = out.withColumn("error", F.col("_rp.error"))
     return out.drop("_rp").withColumn("crs", F.lit("EPSG:4326"))
-
-
-def wgs84_bbox(df: DataFrame) -> dict:
-    """Mega-bbox over reprojected geometry (util/bbox.js fold with the
-    lat/lon range guard; services/spatial.js:318-345)."""
-    guard = df.select(
-        F.array_min(F.filter("geom.xs", lambda v: (v >= -180) & (v <= 180))).alias("nx"),
-        F.array_min(F.filter("geom.ys", lambda v: (v >= -90) & (v <= 90))).alias("ny"),
-        F.array_max(F.filter("geom.xs", lambda v: (v >= -180) & (v <= 180))).alias("xx"),
-        F.array_max(F.filter("geom.ys", lambda v: (v >= -90) & (v <= 90))).alias("xy"),
-    )
-    row = guard.agg(
-        F.min("nx").alias("minx"),
-        F.min("ny").alias("miny"),
-        F.max("xx").alias("maxx"),
-        F.max("xy").alias("maxy"),
-    ).collect()[0]
-    return {"minx": row["minx"], "miny": row["miny"],
-            "maxx": row["maxx"], "maxy": row["maxy"]}

@@ -191,7 +191,7 @@ def grid_density(points: DataFrame, level: int = 6) -> DataFrame:
     n = float(1 << level)
     mask = (1 << 29) - 1
     agg = points.groupBy(
-        cellmod.cell_col(F.col("lon"), F.col("lat"), level).alias("cell_id")
+        cellmod.cell_col("lon", "lat", level).alias("cell_id")
     ).agg(F.count("*").alias("n_points"))
     x = F.shiftright(F.col("cell_id"), 29).bitwiseAND(F.lit(mask))
     y = F.col("cell_id").bitwiseAND(F.lit(mask))
@@ -280,7 +280,7 @@ def hot_cells(points: DataFrame, level: int = 4, top: int = 20) -> DataFrame:
     """
     from geo_import_spark.functions import cells as cellmod
 
-    cell = cellmod.cell_col(F.col("lon"), F.col("lat"), level)
+    cell = cellmod.cell_col("lon", "lat", level)
     counts = points.groupBy(cell.alias("cell_id")).agg(F.count("*").alias("n_points"))
     stats = counts.agg(
         F.sum("n_points").alias("total"), F.count("*").alias("n_cells")

@@ -425,6 +425,44 @@ FROM am JOIN dd ON dd.user_id = am.user_id AND dd.i = am.cp_i
 M4_BUCKET_US = 4 * US_PER_HOUR  # one "pixel column" = 4 hours
 
 
+def m4_keyed(events: DataFrame, op: str) -> DataFrame:
+    """events -> (event_type, ts, event_id, us, vmi, k, kv): the event
+    time in µs, the value in integer micro-units, and M4's exact
+    composite keys. k = us*10^12 + event_id orders first/last;
+    kv = vmi*10^28 + k orders min/max so value ties break to the
+    earliest (us, event_id). Both are DECIMAL(38,0) and injective
+    while event_id is in [0, 10^12), us in [0, 10^16) and vmi in
+    [0, 10^10); a row outside those ranges raises (naming `op`)
+    instead of silently colliding with another key."""
+    e = events.select(
+        "event_type", "ts", "event_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+        F.floor(F.col("value") * 1_000_000).cast("long").alias("vmi"),
+    )
+    k = F.when(
+        (F.col("event_id") >= 0) & (F.col("event_id") < F.lit(10**12))
+        & (F.col("us") >= 0) & (F.col("us") < F.lit(10**16))
+        & (F.col("vmi") >= 0) & (F.col("vmi") < F.lit(10**10)),
+        F.col("us").cast("decimal(38,0)") * F.lit(1_000_000_000_000)
+        + F.col("event_id"),
+    ).otherwise(
+        F.raise_error(
+            F.format_string(
+                f"{op}: (event_id=%s, us=%s, vmi=%s) outside "
+                "the injective-composite-key ranges [0,10^12) / "
+                "[0,10^16) / [0,10^10)",
+                F.col("event_id"), F.col("us"), F.col("vmi"),
+            )
+        ).cast("decimal(38,0)")
+    )
+    return e.withColumn("k", k).withColumn(
+        "kv",
+        F.col("vmi").cast("decimal(38,0)")
+        * F.expr("CAST('10000000000000000000000000000' AS DECIMAL(38,0))")
+        + F.col("k"),
+    )
+
+
 def m4_downsample(events: DataFrame) -> DataFrame:
     """M4 time-series downsampling per event type: for every pixel
     bucket keep the FIRST, LAST, MIN and MAX value with their
@@ -435,15 +473,12 @@ def m4_downsample(events: DataFrame) -> DataFrame:
     rasterized line chart.
 
     Exactness: every output is an integer selected by min_by/max_by
-    on exact composite keys. First/last order by
-    k = us*10^12 + event_id (the ohlc_bars key, same runtime guard:
-    event_id must sit in [0, 10^12)); min/max order by
-    kv = vmi*10^28 + k so value ties break to the earliest
-    (us, event_id), identically in both engines. kv is injective
-    while vmi < 10^10 and us < 10^16 (year 2286) — both ENFORCED:
-    out-of-range rows raise instead of silently corrupting the key.
-    All keys are DECIMAL(38,0) here / HUGEINT in the mirror; no
-    doubles anywhere, so hash parity is structural.
+    on exact composite keys (m4_keyed: k = us*10^12 + event_id,
+    the ohlc_bars key, for first/last; kv = vmi*10^28 + k for
+    min/max), identically in both engines. The key ranges are
+    ENFORCED: out-of-range rows raise instead of silently corrupting
+    the key. All keys are DECIMAL(38,0) here / HUGEINT in the mirror;
+    no doubles anywhere, so hash parity is structural.
 
     Plan: ONE map-side-combined aggregate on the (event_type,
     bucket) key — the whole operator is a single shuffle whose
@@ -453,35 +488,8 @@ def m4_downsample(events: DataFrame) -> DataFrame:
     Output: (event_type, bucket_id, n, t_first_us, v_first_mi,
     t_last_us, v_last_mi, v_min_mi, t_min_us, v_max_mi, t_max_us).
     """
-    guard_k = F.when(
-        (F.col("event_id") >= 0) & (F.col("event_id") < F.lit(10**12))
-        & (F.col("us") >= 0) & (F.col("us") < F.lit(10**16))
-        & (F.col("vmi") >= 0) & (F.col("vmi") < F.lit(10**10)),
-        F.col("us").cast("decimal(38,0)") * F.lit(1_000_000_000_000)
-        + F.col("event_id"),
-    ).otherwise(
-        F.raise_error(
-            F.format_string(
-                "m4_downsample: (event_id=%s, us=%s, vmi=%s) outside "
-                "the injective-composite-key ranges [0,10^12) / "
-                "[0,10^16) / [0,10^10)",
-                F.col("event_id"), F.col("us"), F.col("vmi"),
-            )
-        ).cast("decimal(38,0)")
-    )
-    e = events.select(
-        "event_type", "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-        F.floor(F.col("value") * 1_000_000).cast("long").alias("vmi"),
-    ).select(
-        "event_type", "us", "vmi",
-        F.expr(f"us div {M4_BUCKET_US}").alias("bucket_id"),
-        guard_k.alias("k"),
-    ).select(
-        "event_type", "bucket_id", "us", "vmi", "k",
-        (F.col("vmi").cast("decimal(38,0)")
-         * F.expr("CAST('10000000000000000000000000000' AS DECIMAL(38,0))")
-         + F.col("k")).alias("kv"),
+    e = m4_keyed(events, "m4_downsample").withColumn(
+        "bucket_id", F.expr(f"us div {M4_BUCKET_US}")
     )
     return e.groupBy("event_type", "bucket_id").agg(
         F.count("*").alias("n"),

@@ -33,7 +33,7 @@ def _unit_col():
     """Ancestor cell at UNIT_LEVEL from lon/lat — JVM expression."""
     from geo_import_spark.functions import cells as cellmod
 
-    return cellmod.cell_col(F.col("lon"), F.col("lat"), UNIT_LEVEL)
+    return cellmod.cell_col("lon", "lat", UNIT_LEVEL)
 
 
 def run_pipeline(

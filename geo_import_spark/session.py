@@ -4,7 +4,8 @@ Local-mode for tests/bench (`local[N]`), but every knob here is chosen
 for the 1000-executor case: AQE on (runtime re-plan + skew-join
 backstop for hot cells), Arrow for all pandas-UDF traffic, shuffle
 partitions sized to cores locally (cluster deploys override via
-spark-submit conf).
+spark-submit conf). Local defaults come from the host: the cores the
+process may use and a share of physical RAM for the driver heap.
 """
 
 from __future__ import annotations
@@ -12,6 +13,21 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Default driver heap as a share of physical RAM: the JVM's own default
+# (MaxRAMPercentage=25), leaving the rest to Python workers, off-heap
+# buffers and the page cache. SPARK_GRAFT_DRIVER_MEM overrides it.
+DRIVER_MEM_FRACTION = 0.25
+# Largest LIMIT planned as a top-k (TakeOrderedAndProject). Its buffer
+# is sized by the limit, so a caller-supplied k of 10^9 would reserve
+# gigabytes; above this bound Spark plans a sort plus limit instead.
+TOPK_SORT_FALLBACK_ROWS = 1_000_000
+
+
+def default_cpus() -> int:
+    """SPARK_GRAFT_CPUS if set, else the cores this process may run on
+    (its CPU affinity), not the machine's core count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -21,7 +37,11 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or (
+        f"{max(int(ram * DRIVER_MEM_FRACTION) >> 20, 1024)}m"
+    )
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cpus, 8)
     # Real-cluster override: SPARK_GRAFT_MASTER=yarn|spark://... makes
@@ -40,7 +60,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
+        .config("spark.sql.execution.topKSortFallbackThreshold", str(TOPK_SORT_FALLBACK_ROWS))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # GC threads default to the MACHINE's core count (32 here) —

@@ -233,25 +233,16 @@ def m4_windowed(events: DataFrame, width: str = "4 hours") -> DataFrame:
     Streaming form: `events.withWatermark('ts', ...)` then this
     aggregation in append mode (finalized windows only) or complete
     mode for a live dashboard. Values/keys follow m4_downsample's
-    exact-integer discipline (micro-units, us*10^12+event_id,
-    vmi*10^28+k) — see that docstring for the injectivity ranges.
+    exact-integer discipline (micro-units and the same m4_keyed
+    composite keys, whose ranges are enforced: an out-of-range row
+    raises).
 
     Output: (event_type, win_start, n, t_first_us, v_first_mi,
     t_last_us, v_last_mi, v_min_mi, t_min_us, v_max_mi, t_max_us).
     """
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    vmi = F.floor(F.col("value") * 1_000_000).cast("long")
-    e = events.select(
-        "event_type", "ts",
-        us.alias("us"), vmi.alias("vmi"),
-        (us.cast("decimal(38,0)") * F.lit(1_000_000_000_000)
-         + F.col("event_id")).alias("k"),
-    ).select(
-        "event_type", "ts", "us", "vmi", "k",
-        (F.col("vmi").cast("decimal(38,0)")
-         * F.expr("CAST('10000000000000000000000000000' AS DECIMAL(38,0))")
-         + F.col("k")).alias("kv"),
-    )
+    from geo_import_spark.operators.timeseries import m4_keyed
+
+    e = m4_keyed(events, "m4_windowed")
     return (
         e.groupBy("event_type", F.window("ts", width).alias("win"))
         .agg(

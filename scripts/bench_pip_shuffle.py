@@ -20,7 +20,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from geo_import_spark import corpus  # noqa: E402
 from geo_import_spark.operators import pip as pipmod  # noqa: E402
-from geo_import_spark.session import get_spark  # noqa: E402
+from geo_import_spark.session import default_cpus, get_spark  # noqa: E402
 from geo_import_spark.sources import geojson  # noqa: E402
 
 
@@ -45,7 +45,7 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = get_spark(cpus=cpus, app="bench-pip-shuffle")
     docs = corpus.documents(spark, sf_dir).repartition(cpus * 4).cache()
     docs.count()

@@ -92,53 +92,3 @@ def test_mismatched_buckets_still_correct(spark, two_tables, tmp_path):
         assert joined.count() == 5000
     finally:
         bucketed.drop_bucketed(spark, "b_docs4")
-
-
-def test_spatially_bucketed_pip_has_no_point_side_exchange(
-    spark, sf_dir, tmp_path
-):
-    """Points stored bucketed by a fixed-level cell_id: the PIP cell
-    join shuffles ONLY the polygon cover (one Exchange under forced
-    SMJ) and returns exactly pip_join's broadcast-plan rows."""
-    from geo_import_spark import corpus
-    from geo_import_spark.functions import cells as cellmod
-    from geo_import_spark.operators import pip as pipmod
-    from geo_import_spark.sources import geojson
-
-    LEVEL = 6
-    docs = corpus.documents(spark, sf_dir)
-    pts = geojson.point_spans(docs).withColumn(
-        "cell_id", cellmod.cell_col(F.col("lon"), F.col("lat"), LEVEL)
-    )
-    bucketed.write_bucketed(
-        pts.select("doc_id", "span_offset", "lon", "lat", "cell_id"),
-        "b_pts_cell", str(tmp_path / "pts_cell"), "cell_id",
-        n_buckets=8, sort_cols="cell_id",
-    )
-    try:
-        bp = bucketed.read_bucketed(spark, "b_pts_cell")
-        polys = corpus.polygons(spark, sf_dir)
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-        try:
-            out = pipmod.pip_join_prebucketed(bp, polys, LEVEL)
-            plan = _plan(out)
-            # candidate join: cover side exchanges into the bucket
-            # layout; the point side must NOT (its scan IS the
-            # partitioning). The later poly_id refine join adds its own
-            # exchanges on candidate-sized frames — count only the
-            # exchanges upstream of the first join.
-            cand_section = plan.split("ArrowEvalPython")[0]
-            first_join = cand_section.split("SortMergeJoin")[0]
-            assert "Exchange" not in first_join  # point side co-located
-            got = sorted(map(tuple, out.collect()))
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        expect = sorted(
-            map(tuple, pipmod.pip_join(
-                geojson.point_spans(docs), polys, broadcast_polys=True
-            ).collect())
-        )
-        assert got == expect and len(got) > 0
-    finally:
-        bucketed.drop_bucketed(spark, "b_pts_cell")

@@ -62,7 +62,7 @@ def test_auto_salt_skewed_corpus_splits_hot_cell(spark, sf_dir):
     assert s > 1
     # the salted key distribution is flatter: the hottest (cell, salt)
     # bucket carries a bounded share of what the hottest bare cell did
-    cell = cellmod.cell_col(F.col("lon"), F.col("lat"), 6)
+    cell = cellmod.cell_col("lon", "lat", 6)
     bare_max = (
         pts.groupBy(cell.alias("c")).count().agg(F.max("count")).collect()[0][0]
     )

@@ -18,9 +18,10 @@ def docs(spark, sf_dir):
 
 
 def test_cover_level_col_matches_numpy(spark):
-    """_cover_level_col (JVM when-chain) must pick the exact level
+    """cells.cover_level_col (a JVM expression) must pick the exact level
     cells.covering_bbox picks, bit-for-bit, for arbitrary bboxes —
-    otherwise the shuffle path's point explode misses a level."""
+    otherwise the point explode misses a level — and cells.cover_col
+    must yield covering_bbox's exact cells at that level."""
     rng = np.random.RandomState(7)
     rows = []
     for _ in range(200):
@@ -32,19 +33,16 @@ def test_cover_level_col_matches_numpy(spark):
             (max(cx - w / 2, -180.0), max(cy - h / 2, -90.0),
              min(cx + w / 2, 180.0), min(cy + h / 2, 90.0))
         )
-    exp = [
-        cellmod.covering_bbox(a, b, c, d, 13, 64)[1] for a, b, c, d in rows
-    ]
+    exp = [cellmod.covering_bbox(a, b, c, d, 13, 64) for a, b, c, d in rows]
     df = spark.createDataFrame(rows, "minx double, miny double, maxx double, maxy double")
-    got = [
-        r["lv"]
-        for r in df.select(
-            pipmod._cover_level_col(
-                F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), 13, 64
-            ).alias("lv")
-        ).collect()
-    ]
-    assert got == exp
+    box = ("minx", "miny", "maxx", "maxy")
+    out = (
+        df.withColumn("lv", cellmod.cover_level_col(*box, 13, 64))
+        .select("lv", cellmod.cover_col(*box, "lv").alias("cells"))
+        .collect()
+    )
+    assert [r["lv"] for r in out] == [lv for _, lv in exp]
+    assert [set(r["cells"]) for r in out] == [set(c.tolist()) for c, _ in exp]
 
 
 def test_auto_plan_selection(docs, spark, sf_dir):
@@ -93,6 +91,45 @@ def test_no_persisted_rdds_after_shuffle_pip(docs, spark, sf_dir):
     gc.collect()
     after = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert after <= before
+
+
+def test_shuffle_pip_refine_is_the_only_python_stage(docs, spark, sf_dir):
+    """Shuffle mode computes the polygon cover in the JVM
+    (cells.cover_col), so the refine is the plan's only Arrow UDF."""
+    points = geojson.point_spans(docs)
+    polys = corpus.polygons(spark, sf_dir)
+    out = pipmod.pip_join(points, polys, broadcast_polys=False, salt_factor=1)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython [") == 1
+
+
+def test_pip_prepares_polygon_side_in_at_most_two_jobs(docs, spark, sf_dir):
+    """Before its result runs, pip_join spends at most two jobs in
+    either mode: broadcast = size estimate + rings collect; shuffle =
+    size estimate (which also collects the distinct cover levels) +
+    the auto-salt histogram. AQE is off here because it submits each
+    shuffle stage as a job of its own; without it one action is one
+    job. The polygon side is cached first so that only pip_join's own
+    jobs are counted, not the ones that build the input."""
+    points = geojson.point_spans(docs)
+    polys = corpus.polygons(spark, sf_dir).cache()
+    polys.count()
+    sc = spark.sparkContext
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for mode, budget in (("broadcast", pipmod.BROADCAST_BUDGET_BYTES), ("shuffle", 16)):
+            group = f"pip-prepare-{mode}"
+            sc.setJobGroup(group, "pip_join before execution")
+            try:
+                pipmod.pip_join(points, polys, broadcast_budget_bytes=budget)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2, mode
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+        polys.unpersist()
 
 
 def test_duplicate_clusters_transitive_chain(spark):

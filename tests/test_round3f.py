@@ -110,7 +110,7 @@ def test_hot_cells_flags_planted_hot_cell(spark):
     from geo_import_spark.functions import cells as cellmod
 
     n_cells = (
-        pts.select(cellmod.cell_col(F.col("lon"), F.col("lat"), 4).alias("c"))
+        pts.select(cellmod.cell_col("lon", "lat", 4).alias("c"))
         .distinct()
         .count()
     )

@@ -265,6 +265,18 @@ def test_session_paths_counts_match_sessionize(events, spark):
         assert ">" in r.path or r.path  # non-empty
 
 
+def test_session_paths_huge_top_k_plans_no_topk_buffer(events):
+    # TakeOrderedAndProject sizes its buffer by the limit, so top_k=10^9
+    # would reserve gigabytes; the session's topKSortFallbackThreshold
+    # plans a sort plus limit instead, and small k keeps the top-k
+    def plan(k):
+        return temporal.session_paths(events, top_k=k)._jdf \
+            .queryExecution().executedPlan().toString()
+
+    assert "TakeOrderedAndProject" not in plan(10**9)
+    assert "TakeOrderedAndProject" in plan(10)
+
+
 def test_session_paths_single_user_exchange(spark, sf_dir):
     # one hash exchange on user_id feeds both windows; the only other
     # exchanges are the path-count aggregate and the top-k singleton

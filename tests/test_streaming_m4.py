@@ -7,6 +7,7 @@ WHICH timestamp represents a min/max value."""
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from geo_import_spark.operators import timeseries as tsmod
@@ -110,3 +111,12 @@ def test_streaming_m4_tiebreak_is_earliest(spark, tmp_path):
         pd.Timestamp("2024-01-01 00:30:00").value // 1000)
     assert w0.v_max_mi == 120_000_000
     assert w0.n == 5
+
+
+def test_m4_windowed_rejects_out_of_range_event_id(spark):
+    """m4_windowed shares m4_downsample's composite-key range guard: a
+    negative event_id would alias another row's key, so it raises."""
+    b1, _ = _mk_events()
+    b1.loc[0, "event_id"] = -1
+    with pytest.raises(Exception, match="m4_windowed"):
+        eventsmod.m4_windowed(spark.createDataFrame(b1)).collect()
