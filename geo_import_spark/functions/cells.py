@@ -80,12 +80,26 @@ def morton_key(cell: np.ndarray) -> np.ndarray:
     return ((np.asarray(level).astype(np.uint64) << LEVEL_SHIFT) | m).astype(np.int64)
 
 
-def _grid_sql(v: str, n: str, lat: bool) -> str:
-    """SQL mirror of lonlat_to_xy on one axis: the clipped grid index
-    of the SQL expression `v` with `n` cells per axis (same double
-    arithmetic, so the same bits)."""
+def _n_sql(level) -> str:
+    """SQL for the cells per axis, 2^level, with `level` an int or an
+    integer SQL expression."""
+    return str(1 << level) if isinstance(level, int) else f"shiftleft(1L, {level})"
+
+
+def _clip_sql(i: str, n: str) -> str:
+    """SQL clip of the grid index `i` to [0, n - 1]. A null stays null
+    (greatest/least skip nulls, so they would give n - 1)."""
+    return f"CASE WHEN {i} < 0 THEN 0 WHEN {i} > {n} - 1 THEN {n} - 1 ELSE {i} END"
+
+
+def grid_sql(v: str, n: str, lat: bool, clip: bool = True) -> str:
+    """SQL mirror of lonlat_to_xy on one axis: the grid index of the
+    SQL expression `v` with `n` cells per axis (same double
+    arithmetic, so the same bits), clipped to the grid unless `clip`
+    is false. A null `v` gives a null index."""
     g = f"(90D - ({v})) / 180D" if lat else f"(({v}) + 180D) / 360D"
-    return f"greatest(least(floor({g} * {n}), {n} - 1), 0)"
+    i = f"floor({g} * {n})"
+    return _clip_sql(i, n) if clip else i
 
 
 def _cell_sql(x: str, y: str, level) -> str:
@@ -101,12 +115,13 @@ def cell_col(lon: str, lat: str, level: int):
     codegen (the point side of the PIP join never leaves the JVM).
     `lon`/`lat` are SQL expressions, usually column names; the
     expression is built as one SQL string because every PySpark
-    Column operator costs driver-side round trips."""
+    Column operator costs driver-side round trips. A null coordinate
+    gives a null cell."""
     from pyspark.sql import functions as F
 
     n = str(1 << level)
-    x = _grid_sql(lon, n, lat=False)
-    y = _grid_sql(lat, n, lat=True)
+    x = grid_sql(lon, n, lat=False)
+    y = grid_sql(lat, n, lat=True)
     return F.expr(_cell_sql(x, y, level)).alias(f"cell_l{level}")
 
 
@@ -119,32 +134,48 @@ def cover_level_col(minx: str, miny: str, maxx: str, maxy: str, base_level: int,
     the expression stays small whatever base_level is."""
     from pyspark.sql import functions as F
 
-    n = "shiftleft(1L, _lv)"
-    nx = f"({_grid_sql(maxx, n, False)} - {_grid_sql(minx, n, False)} + 1)"
-    ny = f"({_grid_sql(miny, n, True)} - {_grid_sql(maxy, n, True)} + 1)"
+    n = _n_sql("_lv")
+    nx = f"({grid_sql(maxx, n, False)} - {grid_sql(minx, n, False)} + 1)"
+    ny = f"({grid_sql(miny, n, True)} - {grid_sql(maxy, n, True)} + 1)"
     fits = f"filter(sequence(1, {base_level}), _lv -> {nx} * {ny} <= {max_cells})"
     return F.expr(f"cast(coalesce(array_max({fits}), 1) as int)")
+
+
+def window_col(x0: str, x1: str, y0: str, y1: str, level):
+    """JVM column expression: array<long> of the cell ids in grid
+    columns x0..x1 and rows y0..y1 at `level` (an int, or an integer
+    SQL expression), rows north to south, each row west to east. The
+    bounds are SQL expressions for unclipped grid indices: columns
+    wrap (pmod), and a span of n or more columns gives the whole row
+    once; rows clip to [0, n - 1]. A null bound gives a null array
+    (explode drops it). The engine's one rectangle of quadtree cells:
+    the PIP cover (cover_col), the kNN ring and the radius-join disk
+    all go through it."""
+    from pyspark.sql import functions as F
+
+    n = _n_sql(level)
+    xs = (
+        f"CASE WHEN ({x1}) - ({x0}) >= {n} - 1 THEN sequence(0L, {n} - 1L) "
+        f"ELSE transform(sequence({x0}, {x1}), _px -> pmod(_px, {n})) END"
+    )
+    ys = f"sequence({_clip_sql(y0, n)}, {_clip_sql(y1, n)})"
+    cell = _cell_sql("_wx", "_wy", level)
+    return F.expr(f"flatten(transform({ys}, _wy -> transform({xs}, _wx -> {cell})))")
 
 
 def cover_col(minx: str, miny: str, maxx: str, maxy: str, level):
     """JVM column expression: array<long> of the cell ids covering the
     bbox at `level` (an int, or an integer SQL expression such as the
     name of a cover_level_col column); the bbox arguments are SQL
-    expressions, usually column names. A nested sequence/transform
-    over cell_col's clipped grid formula, in covering_bbox's order
-    (rows north to south, each row west to east), so it equals
-    covering_bbox's cells bit-for-bit. A null bbox gives a null array
-    (explode drops it)."""
-    from pyspark.sql import functions as F
-
-    n = str(1 << level) if isinstance(level, int) else f"shiftleft(1L, {level})"
-    xs = f"sequence({_grid_sql(minx, n, False)}, {_grid_sql(maxx, n, False)})"
-    ys = f"sequence({_grid_sql(maxy, n, True)}, {_grid_sql(miny, n, True)})"
-    cells = f"flatten(transform({ys}, _cy -> transform({xs}, _cx -> {_cell_sql('_cx', '_cy', level)})))"
-    # greatest/least skip nulls, so the grid formula alone would turn a
-    # null bbox into the grid's last cell
-    known = " AND ".join(f"({v}) IS NOT NULL" for v in (minx, miny, maxx, maxy))
-    return F.expr(f"CASE WHEN {known} THEN {cells} END")
+    expressions, usually column names. The window over cell_col's
+    clipped grid indices, in covering_bbox's order (rows north to
+    south, each row west to east), so it equals covering_bbox's cells
+    bit-for-bit. A null bbox gives a null array (explode drops it)."""
+    n = _n_sql(level)
+    return window_col(
+        grid_sql(minx, n, False), grid_sql(maxx, n, False),
+        grid_sql(maxy, n, True), grid_sql(miny, n, True), level,
+    )
 
 
 def cell_encode(lon: np.ndarray, lat: np.ndarray, level: int) -> np.ndarray:
@@ -177,7 +208,8 @@ def k_ring(cell: int, k: int) -> np.ndarray:
     """All cell ids within Chebyshev grid distance k of `cell` (incl. it).
 
     Longitude wraps; latitude clips at the poles. Scalar cell in,
-    array of ids out — used for kNN candidate expansion (SURVEY §2.5).
+    array of ids out — the NumPy reference of the kNN ring that
+    window_col builds in the JVM (SURVEY §2.5).
     """
     x, y, level = cell_decode(np.asarray([cell]))
     x, y, level = int(x[0]), int(y[0]), int(level[0])
@@ -216,35 +248,30 @@ def parent_at(cell: np.ndarray, level: int) -> np.ndarray:
     return encode_xy(x >> shift, y >> shift, level)
 
 
-def morton_col(lon, lat, level: int):
+def morton_col(lon: str, lat: str, level: int):
     """JVM column expression: Z-order (Morton) key of (lon, lat) at
-    `level` — 5 shift-mask spread steps per axis, all inside
-    whole-stage codegen. Use as the sort key of
-    ``repartitionByRange``: contiguous key ranges are contiguous
-    regions of the map, so range partitions are spatial partitions
-    (the explicit "adaptive repartitioning" strategy of SURVEY
-    §4.2.3 — partition bounds adapt to the data's spatial density
-    via Spark's range sampling)."""
+    `level` (without the level bits) — cell_col's grid indices, each
+    spread by 5 shift-mask steps. `lon`/`lat` are SQL expressions,
+    usually column names; a null coordinate gives a null key. Use as
+    the sort key of ``repartitionByRange``: contiguous key ranges are
+    contiguous regions of the map, so range partitions are spatial
+    partitions (the explicit "adaptive repartitioning" strategy of
+    SURVEY §4.2.3 — partition bounds adapt to the data's spatial
+    density via Spark's range sampling)."""
     from pyspark.sql import functions as F
 
-    n = 1 << level
-    x = F.floor((lon + 180.0) / 360.0 * n).cast("long")
-    y = F.floor((90.0 - lat) / 180.0 * n).cast("long")
-    x = F.greatest(F.least(x, F.lit(n - 1)), F.lit(0))
-    y = F.greatest(F.least(y, F.lit(n - 1)), F.lit(0))
+    n = str(1 << level)
+    steps = ", ".join(
+        f"named_struct('s', {s}, 'm', {int(m)}L)"
+        for s, m in ((16, _M16), (8, _M8), (4, _M4), (2, _M2), (1, _M1))
+    )
 
     def spread(v):
-        for shift, mask in (
-            (16, 0x0000FFFF0000FFFF),
-            (8, 0x00FF00FF00FF00FF),
-            (4, 0x0F0F0F0F0F0F0F0F),
-            (2, 0x3333333333333333),
-            (1, 0x5555555555555555),
-        ):
-            v = v.bitwiseOR(F.shiftleft(v, shift)).bitwiseAND(F.lit(mask))
-        return v
+        return f"aggregate(array({steps}), {v}, (_v, _e) -> (_v | shiftleft(_v, _e.s)) & _e.m)"
 
-    return spread(x).bitwiseOR(F.shiftleft(spread(y), 1)).alias(f"morton_l{level}")
+    x = spread(grid_sql(lon, n, lat=False))
+    y = spread(grid_sql(lat, n, lat=True))
+    return F.expr(f"{x} | shiftleft({y}, 1)").alias(f"morton_l{level}")
 
 
 def spatial_repartition(df, num_partitions: int, level: int = 13,
@@ -254,7 +281,4 @@ def spatial_repartition(df, num_partitions: int, level: int = 13,
     observed density (Spark samples the key distribution), and
     downstream per-partition work (cell joins, per-unit checkpoints)
     touches contiguous map regions."""
-    from pyspark.sql import functions as F
-
-    key = morton_col(F.col(lon_col), F.col(lat_col), level)
-    return df.repartitionByRange(num_partitions, key)
+    return df.repartitionByRange(num_partitions, morton_col(lon_col, lat_col, level))

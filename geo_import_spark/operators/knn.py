@@ -6,89 +6,66 @@ a query is *settled* once its kth candidate distance is provably
 smaller than the distance to any point outside the ring
 (margin = (r-1) * cell_height_deg). Unsettled queries iterate with a
 doubled ring — a driver loop over a shrinking DataFrame, each pass a
-single cell-equi join (no cross join ever materializes).
+single cell-equi join (no cross join ever materializes). The ring and
+the radius join's disk are JVM windows of grid cells
+(cells.window_col), so neither operator has a Python stage.
 
-Metric: planar degree-space distance (dist_sq = dlon^2 + dlat^2) for
-oracle-exact determinism (pure IEEE arithmetic, identical in DuckDB);
-`haversine=True` switches to great-circle meters for real use.
-Ties broken by point key => total order, engine-independent.
+Metric: planar degree-space distance (dist = sqrt(dlon^2 + dlat^2),
+mul/add/sqrt only) for oracle-exact determinism (correctly-rounded
+IEEE arithmetic, identical in DuckDB); `haversine=True` switches to
+great-circle meters for real use. Candidates rank by dist, then by
+point key => total order, engine-independent.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from geo_import_spark.functions import cells as cellmod
 
 EARTH_RADIUS_M = 6371008.8
 
 
-def make_ring_udf(level: int, r: int):
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def ring_cells(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        center = cellmod.cell_encode(lon.values, lat.values, level)
-        return pd.Series([cellmod.k_ring(int(c), r).tolist() for c in center])
-
-    return ring_cells
-
-
-def haversine_m(lon1, lat1, lon2, lat2):
-    """Great-circle meters, JVM-side column expression (no UDF)."""
-    rl1, rl2 = F.radians(lat1), F.radians(lat2)
-    dlat = F.radians(lat2) - F.radians(lat1)
-    dlon = F.radians(lon2) - F.radians(lon1)
-    a = F.sin(dlat / 2) ** 2 + F.cos(rl1) * F.cos(rl2) * F.sin(dlon / 2) ** 2
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(a))
+def _dist_sql(haversine: bool) -> str:
+    """SQL distance from (qlon, qlat) to (lon, lat): great-circle
+    meters, or planar degrees built from mul + add + sqrt, all
+    correctly-rounded IEEE ops, so the boundary predicate is
+    bit-identical in any engine (pow is only 1-ulp in the JVM)."""
+    if not haversine:
+        return "sqrt((lon - qlon) * (lon - qlon) + (lat - qlat) * (lat - qlat))"
+    a = (
+        "power(sin((radians(lat) - radians(qlat)) / 2), 2)"
+        " + cos(radians(qlat)) * cos(radians(lat))"
+        " * power(sin((radians(lon) - radians(qlon)) / 2), 2)"
+    )
+    return f"{2.0 * EARTH_RADIUS_M!r}D * asin(sqrt({a}))"
 
 
-def make_disk_cells_udf(level: int, radius: float, haversine: bool):
+def _disk_col(level: int, radius: float, haversine: bool):
     """Cells covering the lon/lat rectangle that bounds each query's
     radius disk. Planar: radius is degrees, the rectangle is ±radius.
     Haversine: radius is meters; bounds are EXACTLY conservative on
     the sphere — Δlat ≤ d/R (haversine is monotone in Δlat), and
     sin(Δlon/2) ≤ sin(d/2R)/cos(worst_lat) from
     hav(d/R) ≥ cos(lat1)cos(lat2)·hav(Δlon). Longitude wraps;
-    latitude clips at the poles."""
-    n = 1 << level
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def disk_cells(qlon: pd.Series, qlat: pd.Series) -> pd.Series:
-        lon = qlon.values.astype(np.float64)
-        lat = qlat.values.astype(np.float64)
-        if haversine:
-            dlat = np.degrees(radius / EARTH_RADIUS_M)
-            worst = np.minimum(np.abs(lat) + dlat, 89.999)
-            s = np.sin(radius / (2.0 * EARTH_RADIUS_M)) / np.cos(np.radians(worst))
-            dlon = np.where(
-                s >= 1.0, 180.0, np.degrees(2.0 * np.arcsin(np.minimum(s, 1.0)))
-            )
-        else:
-            dlat = float(radius)
-            dlon = np.full(len(lon), float(radius))
-        x0 = np.floor((lon - dlon + 180.0) / 360.0 * n).astype(np.int64)
-        x1 = np.floor((lon + dlon + 180.0) / 360.0 * n).astype(np.int64)
-        y0 = np.floor((90.0 - (lat + dlat)) / 180.0 * n).astype(np.int64)
-        y1 = np.floor((90.0 - (lat - dlat)) / 180.0 * n).astype(np.int64)
-        np.clip(y0, 0, n - 1, out=y0)
-        np.clip(y1, 0, n - 1, out=y1)
-        out = []
-        for i in range(len(lon)):
-            if x1[i] - x0[i] + 1 >= n:
-                xs = np.arange(n, dtype=np.int64)
-            else:
-                xs = np.arange(x0[i], x1[i] + 1, dtype=np.int64) % n
-            gx, gy = np.meshgrid(xs, np.arange(y0[i], y1[i] + 1, dtype=np.int64))
-            out.append(
-                cellmod.encode_xy(gx.ravel(), gy.ravel(), level).tolist()
-            )
-        return pd.Series(out)
-
-    return disk_cells
+    latitude clips at the poles (cells.window_col)."""
+    n = str(1 << level)
+    if haversine:
+        dlat = f"{float(np.degrees(radius / EARTH_RADIUS_M))!r}D"
+        sin_half = float(np.sin(radius / (2.0 * EARTH_RADIUS_M)))
+        s = f"{sin_half!r}D / cos(radians(least(abs(qlat) + {dlat}, 89.999D)))"
+        dlon = f"CASE WHEN {s} >= 1D THEN 180D ELSE degrees(2D * asin({s})) END"
+    else:
+        dlat = dlon = f"{float(radius)!r}D"
+    return cellmod.window_col(
+        cellmod.grid_sql(f"qlon - ({dlon})", n, False, clip=False),
+        cellmod.grid_sql(f"qlon + ({dlon})", n, False, clip=False),
+        cellmod.grid_sql(f"qlat + ({dlat})", n, True, clip=False),
+        cellmod.grid_sql(f"qlat - ({dlat})", n, True, clip=False),
+        level,
+    )
 
 
 def radius_join(
@@ -119,24 +96,14 @@ def radius_join(
     pts = points.select(point_key, "lon", "lat").withColumn(
         "cell_id", cellmod.cell_col("lon", "lat", level)
     )
-    disk = make_disk_cells_udf(level, radius, haversine)
     cand = (
         queries.select("query_id", "qlon", "qlat")
-        .withColumn("cell_id", F.explode(disk("qlon", "qlat")))
+        .withColumn("cell_id", F.explode(_disk_col(level, radius, haversine)))
         .join(pts, "cell_id")
     )
-    if haversine:
-        dist = haversine_m(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat"))
-    else:
-        # mul + add + sqrt are all correctly-rounded IEEE ops, so the
-        # boundary predicate is bit-identical in any engine (pow is
-        # only 1-ulp in the JVM — avoided on purpose).
-        dlon = F.col("lon") - F.col("qlon")
-        dlat = F.col("lat") - F.col("qlat")
-        dist = F.sqrt(dlon * dlon + dlat * dlat)
     return (
-        cand.withColumn("dist", dist)
-        .filter(F.col("dist") <= F.lit(float(radius)))
+        cand.withColumn("dist", F.expr(_dist_sql(haversine)))
+        .filter(f"dist <= {float(radius)!r}D")
         .select("query_id", point_key, "dist")
     )
 
@@ -170,6 +137,12 @@ def knn_join(
     )
     pts.cache()
     sy = 180.0 / (1 << level)  # cell height in degrees (the tighter axis)
+    # the query's own cell, as grid indices (the ring's centre)
+    cx = cellmod.grid_sql("qlon", str(1 << level), lat=False)
+    cy = cellmod.grid_sql("qlat", str(1 << level), lat=True)
+    dist = F.expr(_dist_sql(haversine))
+    rank = F.expr(f"row_number() OVER (PARTITION BY query_id ORDER BY dist, {point_key})")
+    n_kth = (F.expr("count(*) AS n"), F.expr("max(dist) AS kth"))
 
     pending = queries.select("query_id", "qlon", "qlat")
     results = None
@@ -190,19 +163,12 @@ def knn_join(
         n_pending = pending.count()
         if n_pending == 0:
             break
-        ring_udf = make_ring_udf(level, r)
+        ring = cellmod.window_col(f"{cx} - {r}", f"{cx} + {r}", f"{cy} - {r}", f"{cy} + {r}", level)
         cand = (
-            pending.withColumn("cell_id", F.explode(ring_udf("qlon", "qlat")))
+            pending.withColumn("cell_id", F.explode(ring))
             .join(pts, "cell_id")
+            .withColumn("dist", dist)
         )
-        if haversine:
-            dist = haversine_m(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat"))
-        else:
-            dist = F.sqrt(
-                (F.col("lon") - F.col("qlon")) ** 2 + (F.col("lat") - F.col("qlat")) ** 2
-            )
-        cand = cand.withColumn("dist", dist)
-        w = W.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col(point_key).asc())
         # topk is TINY (≤ k rows per pending query) but expensive to
         # compute (the ring join + window over the point table), and
         # THREE consumers branch off it (settle aggregate, settled
@@ -211,31 +177,30 @@ def knn_join(
         # 2-3x the round wall at sf0.1, where every query settles in
         # round one).
         topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            cand.withColumn("rank", rank)
+            .filter(f"rank <= {k}")
             .localCheckpoint(eager=True)
         )
         # settled: kth neighbor provably closer than any point outside the
         # ring. Planar: outside => |dlon| or |dlat| >= (r-1)*sy degrees.
         # Haversine: the x-direction bound shrinks with cos(lat) near the
         # poles, so the margin is per-query and conservative.
-        agg = topk.groupBy("query_id").agg(
-            F.count("*").alias("n"), F.max("dist").alias("kth")
-        )
+        agg = topk.groupBy("query_id").agg(*n_kth)
         ring_covers_world = (2 * r + 1) >= (1 << level)
         if ring_covers_world:
             settled_ids = agg.select("query_id")
         else:
             if haversine:
                 agg = agg.join(pending, "query_id")
-                reach = F.least(F.abs(F.col("qlat")) + (r + 1) * sy, F.lit(89.9))
-                margin_col = F.lit((r - 1) * sy * 110567.0) * F.least(
-                    F.lit(1.0), 2.0 * F.cos(F.radians(reach))
+                reach = f"least(abs(qlat) + {(r + 1) * sy!r}D, 89.9D)"
+                margin = (
+                    f"{(r - 1) * sy * 110567.0!r}D"
+                    f" * least(1D, 2D * cos(radians({reach})))"
                 )
             else:
-                margin_col = F.lit(float((r - 1) * sy))
+                margin = f"{float((r - 1) * sy)!r}D"
             settled_ids = agg.filter(
-                (F.col("n") >= k) & (margin_col > 0) & (F.col("kth") <= margin_col)
+                f"n >= {k} AND {margin} > 0 AND kth <= {margin}"
             ).select("query_id")
         settled = topk.join(settled_ids, "query_id").select(
             "query_id", point_key, "rank", "dist"
@@ -246,7 +211,7 @@ def knn_join(
         # across rounds without spending an extra job per round.
         results = ck_res.truncate(results, rnd, eager=ck_res.durable)
         # pending MUST checkpoint too: a bare left_anti chain makes
-        # round i recompute every earlier round's ring UDF + window
+        # round i recompute every earlier round's ring + window
         # (measured ~5x on the polar haversine path). Cheap now: its
         # parents are the checkpointed topk and the prior pending.
         pending = ck_pen.truncate(

@@ -1,7 +1,10 @@
 """spark-submit entry for the checkpointed PIP + tiling pipeline.
 
-    spark-submit --master local[32] --py-files geo_import_spark.zip \
+    spark-submit --py-files geo_import_spark.zip \
         run_job.py --sf-dir /root/testdata/sf0.1 --out /tmp/pipeline_out
+
+The session runs local[N] with N = --cpus, by default the cores this
+process may use (session.default_cpus).
 
 Re-running after a kill resumes from the per-stage lineage logs.
 """
@@ -16,7 +19,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--out", required=True)
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args()
 
     from geo_import_spark.plans.pipeline import pipeline_metrics, run_pipeline

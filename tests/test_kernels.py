@@ -230,7 +230,6 @@ def test_batch_pip_matches_scalar_oracle(ring_pts, px, py):
 def test_jvm_morton_matches_numpy(spark):
     import numpy as np
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from geo_import_spark.functions import cells as C
 
@@ -239,7 +238,7 @@ def test_jvm_morton_matches_numpy(spark):
     lat = rng.uniform(-85, 85, 300)
     df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
     got = np.sort(
-        df.select(C.morton_col(F.col("lon"), F.col("lat"), 13).alias("m"))
+        df.select(C.morton_col("lon", "lat", 13).alias("m"))
         .toPandas()["m"].values
     )
     exp = np.sort(C.morton_key(C.cell_encode(lon, lat, 13)) & ((1 << 58) - 1))
