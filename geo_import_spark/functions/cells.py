@@ -86,7 +86,7 @@ def _n_sql(level) -> str:
     return str(1 << level) if isinstance(level, int) else f"shiftleft(1L, {level})"
 
 
-def _clip_sql(i: str, n: str) -> str:
+def clip_sql(i: str, n: str) -> str:
     """SQL clip of the grid index `i` to [0, n - 1]. A null stays null
     (greatest/least skip nulls, so they would give n - 1)."""
     return f"CASE WHEN {i} < 0 THEN 0 WHEN {i} > {n} - 1 THEN {n} - 1 ELSE {i} END"
@@ -99,7 +99,19 @@ def grid_sql(v: str, n: str, lat: bool, clip: bool = True) -> str:
     is false. A null `v` gives a null index."""
     g = f"(90D - ({v})) / 180D" if lat else f"(({v}) + 180D) / 360D"
     i = f"floor({g} * {n})"
-    return _clip_sql(i, n) if clip else i
+    return clip_sql(i, n) if clip else i
+
+
+def grid_xy(lon: str, lat: str, level: int):
+    """JVM column expressions (x, y): the grid indices of (lon, lat)
+    at `level`, one grid_sql F.expr per axis. `lon`/`lat` are SQL
+    expressions, usually column names. The Spark side's one quadtree
+    grid index for operators that key by (x, y) rather than cell id;
+    a null coordinate gives a null index."""
+    from pyspark.sql import functions as F
+
+    n = str(1 << level)
+    return F.expr(grid_sql(lon, n, lat=False)), F.expr(grid_sql(lat, n, lat=True))
 
 
 def _cell_sql(x: str, y: str, level) -> str:
@@ -158,7 +170,7 @@ def window_col(x0: str, x1: str, y0: str, y1: str, level):
         f"CASE WHEN ({x1}) - ({x0}) >= {n} - 1 THEN sequence(0L, {n} - 1L) "
         f"ELSE transform(sequence({x0}, {x1}), _px -> pmod(_px, {n})) END"
     )
-    ys = f"sequence({_clip_sql(y0, n)}, {_clip_sql(y1, n)})"
+    ys = f"sequence({clip_sql(y0, n)}, {clip_sql(y1, n)})"
     cell = _cell_sql("_wx", "_wy", level)
     return F.expr(f"flatten(transform({ys}, _wy -> transform({xs}, _wx -> {cell})))")
 

@@ -23,10 +23,11 @@ three DBSCAN-specific aspects: density is the NEIGHBORHOOD sum rather
 than the cell's own count, connectivity is 8-way, and non-core cells
 are classified border/noise instead of dropped.
 
-Determinism contract: grid arithmetic is the same clamp/floor used by
-tiling.py's mirrors; cluster ids are the lexicographic min of the
-component's zero-padded cell keys (format_string %0Nd — never lpad,
-ADVICE r3); border ties break to the min adjacent core label.
+Determinism contract: grid arithmetic is cells.grid_xy, the engine's
+one clamp/floor grid formula (a null coordinate lands in no cell);
+cluster ids are the lexicographic min of the component's zero-padded
+cell keys (format_string %0Nd — never lpad, ADVICE r3); border ties
+break to the min adjacent core label.
 
 Reference parity: geo-import has no clustering (es6-lib decoders are
 row streaming only); this extends the spatial-statistics family the
@@ -37,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from geo_import_spark.functions import cells as cellmod
 
 DBSCAN_LEVEL = 5     # 32x32 grid (eps = 1 cell ~ 11.25 x 5.6 deg here;
                      # real deployments size the grid from eps)
@@ -53,25 +56,6 @@ def adaptive_min_pts(n_points: int, max_nbr: int, level: int) -> int:
     integer scalars -> pure integer math, mirrored verbatim in SQL."""
     m = (9 * int(n_points)) // (1 << (2 * level))
     return (m + int(max_nbr) + 2) // 2
-
-
-def _grid_xy(n: int):
-    nf = float(n)
-    gx = F.greatest(
-        F.least(
-            F.floor((F.col("lon") + 180.0) / 360.0 * F.lit(nf)).cast("long"),
-            F.lit(n - 1),
-        ),
-        F.lit(0),
-    )
-    gy = F.greatest(
-        F.least(
-            F.floor((90.0 - F.col("lat")) / 180.0 * F.lit(nf)).cast("long"),
-            F.lit(n - 1),
-        ),
-        F.lit(0),
-    )
-    return gx, gy
 
 
 def grid_dbscan(
@@ -98,7 +82,7 @@ def grid_dbscan(
     by 4^level regardless of input size.
     """
     n = 1 << level
-    gx, gy = _grid_xy(n)
+    gx, gy = cellmod.grid_xy("lon", "lat", level)
     width = max(3, len(str(n - 1)))
     key = F.format_string(f"c%0{width}d%0{width}d", F.col("x"), F.col("y"))
 

@@ -32,17 +32,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geo_import_spark.functions import cells as cellmod
+
 MORAN_LEVEL = 6
 _N = 1 << MORAN_LEVEL
 
 
-def _grid_xy(points: DataFrame) -> DataFrame:
-    """Clamp/floor grid assignment — the same arithmetic as
-    functions/cells.py cell_col and the grid_density oracle."""
-    gx = F.floor((F.col("lon") + 180.0) / 360.0 * _N).cast("long")
-    gy = F.floor((90.0 - F.col("lat")) / 180.0 * _N).cast("long")
-    clamp = lambda c: F.greatest(F.least(c, F.lit(_N - 1)), F.lit(0))
-    return points.select(clamp(gx).alias("x"), clamp(gy).alias("y"))
+def _grid_xy(points: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, x, y): each point's grid indices at MORAN_LEVEL from
+    cells.grid_xy, the engine's grid formula (cell_col's arithmetic).
+    A point with a null coordinate is in no cell, so it is dropped:
+    it is neither counted in a real cell nor an areal unit itself."""
+    gx, gy = cellmod.grid_xy("lon", "lat", MORAN_LEVEL)
+    return points.select(*keep, gx.alias("x"), gy.alias("y")).where(
+        "x IS NOT NULL AND y IS NOT NULL"
+    )
 
 
 def morans_i(points: DataFrame) -> DataFrame:
@@ -685,7 +689,7 @@ def emerging_hotspots(points: DataFrame, months: DataFrame) -> DataFrame:
     the same bounded-quadratic argument as theil_sen after its
     guard.
     """
-    cells = _grid_xy_doc(points)
+    cells = _grid_xy(points, "doc_id")
     hit_m = cells.join(months, "doc_id").select("x", "y", "month_id")
     # Lineage pins (the tile_pyramid/grid_dbscan discipline): counts
     # feeds three consumers (occupied, the left join, and — via dense
@@ -740,16 +744,6 @@ def emerging_hotspots(points: DataFrame, months: DataFrame) -> DataFrame:
         .when(F.col("s") > 0, F.lit("inc"))
         .otherwise(F.lit("dec"))
         .alias("label"),
-    )
-
-
-def _grid_xy_doc(points: DataFrame) -> DataFrame:
-    """_grid_xy keeping doc_id (for calendar joins)."""
-    gx = F.floor((F.col("lon") + 180.0) / 360.0 * _N).cast("long")
-    gy = F.floor((90.0 - F.col("lat")) / 180.0 * _N).cast("long")
-    clamp = lambda c: F.greatest(F.least(c, F.lit(_N - 1)), F.lit(0))
-    return points.select(
-        "doc_id", clamp(gx).alias("x"), clamp(gy).alias("y")
     )
 
 
@@ -970,7 +964,7 @@ def grid_change(points: DataFrame, months: DataFrame) -> DataFrame:
         F.min("month_id").alias("m0"), F.max("month_id").alias("m1")
     ).select(F.expr("(m0 + m1) div 2").alias("mid"))
     c = (
-        _grid_xy_doc(points)
+        _grid_xy(points, "doc_id")
         .join(months, "doc_id")
         .crossJoin(F.broadcast(bounds))
     )

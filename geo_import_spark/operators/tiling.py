@@ -4,35 +4,17 @@ North-rule operator (no reference counterpart; geo-import only passes
 blobs through, es6-lib/upstream/core.js:248-263). A media span is
 located at its document's geometry anchor (first geometry span); the
 tile id is the standard Web-Mercator slippy tile + Bing quadkey,
-computed in one vectorized pandas UDF.
+computed as JVM SQL expressions (functions/tiles.py *_sql), no UDF.
+The quadtree-grid operators below index points with cells.grid_xy.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
+from geo_import_spark.functions import cells as cellmod
 from geo_import_spark.functions import tiles as tilemod
-
-TILE_TYPE = T.StructType(
-    [
-        T.StructField("x", T.LongType()),
-        T.StructField("y", T.LongType()),
-        T.StructField("quadkey", T.StringType()),
-    ]
-)
-
-
-def make_tile_udf(z: int):
-    @pandas_udf(TILE_TYPE)
-    def tile_assign(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        x, y = tilemod.tile_xy(lon.values, lat.values, z)
-        return pd.DataFrame({"x": x, "y": y, "quadkey": tilemod.quadkey_list(x, y, z)})
-
-    return tile_assign
 
 
 def media_spans(documents: DataFrame) -> DataFrame:
@@ -53,67 +35,29 @@ def assign_tiles(documents: DataFrame, anchors: DataFrame, z: int = 12) -> DataF
     deduplicated to the min span_offset geometry per doc.
     Output: (doc_id, span_offset, media_ref, z, x, y, quadkey).
     """
-    media = media_spans(documents)
-    tile_udf = make_tile_udf(z)
-    out = (
-        media.join(anchors.select("doc_id", "lon", "lat"), "doc_id")
-        .withColumn("tile", tile_udf("lon", "lat"))
-        .select(
-            "doc_id",
-            "span_offset",
-            "media_ref",
-            F.lit(z).alias("z"),
-            F.col("tile.x").alias("x"),
-            F.col("tile.y").alias("y"),
-            F.col("tile.quadkey").alias("quadkey"),
-        )
+    return assign_tiles_from_anchors(
+        media_spans(documents), anchors.select("doc_id", "lon", "lat"), z
     )
-    return out
 
 
 def assign_tiles_from_anchors(media: DataFrame, anchors: DataFrame, z: int = 12) -> DataFrame:
     """Tile-assign media spans against a prepared anchors frame,
     preserving any extra anchor columns (e.g. the checkpoint `unit`).
     anchors: (doc_id, lon, lat[, ...]); media: (doc_id, span_offset,
-    media_ref)."""
-    tile_udf = make_tile_udf(z)
+    media_ref). The quadkey is computed over the projected x/y
+    columns; a null anchor coordinate gives a null x/y/quadkey."""
     extra = [c for c in anchors.columns if c not in ("doc_id", "lon", "lat")]
-    return (
-        media.join(anchors, "doc_id")
-        .withColumn("tile", tile_udf("lon", "lat"))
-        .select(
-            "doc_id",
-            "span_offset",
-            "media_ref",
-            F.lit(z).alias("z"),
-            F.col("tile.x").alias("x"),
-            F.col("tile.y").alias("y"),
-            F.col("tile.quadkey").alias("quadkey"),
-            *extra,
-        )
+    head = ["doc_id", "span_offset", "media_ref", "z", "x", "y"]
+    xy = media.join(anchors, "doc_id").select(
+        "doc_id",
+        "span_offset",
+        "media_ref",
+        F.lit(z).alias("z"),
+        F.expr(tilemod.tile_x_sql("lon", z)).alias("x"),
+        F.expr(tilemod.tile_y_sql("lat", z)).alias("y"),
+        *extra,
     )
-
-
-COVER_TYPE = T.StructType(
-    [
-        T.StructField("x0", T.LongType()),
-        T.StructField("x1", T.LongType()),
-        T.StructField("y0", T.LongType()),
-        T.StructField("y1", T.LongType()),
-    ]
-)
-
-
-def make_cover_udf(z: int):
-    @pandas_udf(COVER_TYPE)
-    def tile_bounds(
-        minx: pd.Series, miny: pd.Series, maxx: pd.Series, maxy: pd.Series
-    ) -> pd.DataFrame:
-        x0, y1 = tilemod.tile_xy(minx.values, miny.values, z)  # south edge: larger y
-        x1, y0 = tilemod.tile_xy(maxx.values, maxy.values, z)  # north edge: smaller y
-        return pd.DataFrame({"x0": x0, "x1": x1, "y0": y0, "y1": y1})
-
-    return tile_bounds
+    return xy.select(*head, F.expr(tilemod.quadkey_sql("x", "y", z)).alias("quadkey"), *extra)
 
 
 def cover_tiles(polygons: DataFrame, z: int = 7) -> DataFrame:
@@ -121,42 +65,35 @@ def cover_tiles(polygons: DataFrame, z: int = 7) -> DataFrame:
     raster←vector direction complementing assign_tiles (vector→raster):
     which tiles must be rendered/fetched for each polygon.
 
-    The four corner projections reuse the same NumPy slippy math as
-    assign_tiles (one Arrow batch per partition, 4 scalars per
-    polygon); the tile enumeration is a JVM sequence() double-explode
-    and the quadkey is pure integer bit math — so the fan-out (the
-    data-sized part: a polygon spanning many tiles) never touches
-    Python. For axis-aligned polygons (the corpus layers) the bbox
-    cover IS the exact polygon cover; for general shapes it is the
-    standard coarse cover that a ray-cast refinement would prune.
+    The four corner projections are the same JVM slippy SQL as
+    assign_tiles (functions/tiles.py), the tile enumeration is a JVM
+    sequence() double-explode and the quadkey is integer bit math over
+    the exploded x/y — no Python anywhere. For axis-aligned polygons
+    (the corpus layers) the bbox cover IS the exact polygon cover; for
+    general shapes it is the standard coarse cover that a ray-cast
+    refinement would prune. A null bbox covers no tile.
 
     polygons(poly_id, minx, miny, maxx, maxy, ...) ->
     (poly_id, z, x, y, quadkey), one row per covered tile.
     """
-    b = polygons.withColumn(
-        "tb", make_cover_udf(z)("minx", "miny", "maxx", "maxy")
+    b = polygons.select(
+        "poly_id",
+        F.expr(tilemod.tile_x_sql("minx", z)).alias("x0"),
+        F.expr(tilemod.tile_x_sql("maxx", z)).alias("x1"),
+        F.expr(tilemod.tile_y_sql("maxy", z)).alias("y0"),  # north edge: smaller y
+        F.expr(tilemod.tile_y_sql("miny", z)).alias("y1"),  # south edge: larger y
     )
     xy = b.select(
-        "poly_id",
-        F.explode(F.sequence(F.col("tb.x0"), F.col("tb.x1"))).alias("x"),
-        F.col("tb.y0").alias("y0"),
-        F.col("tb.y1").alias("y1"),
+        "poly_id", F.explode(F.sequence("x0", "x1")).alias("x"), "y0", "y1"
     ).select(
         "poly_id", "x", F.explode(F.sequence("y0", "y1")).alias("y")
     )
-    digits = [
-        (
-            F.shiftright(F.col("x"), z - i).bitwiseAND(F.lit(1))
-            + F.lit(2) * F.shiftright(F.col("y"), z - i).bitwiseAND(F.lit(1))
-        ).cast("string")
-        for i in range(1, z + 1)
-    ]
     return xy.select(
         "poly_id",
         F.lit(z).alias("z"),
         "x",
         "y",
-        F.concat(*digits).alias("quadkey"),
+        F.expr(tilemod.quadkey_sql("x", "y", z)).alias("quadkey"),
     )
 
 
@@ -186,8 +123,6 @@ def grid_density(points: DataFrame, level: int = 6) -> DataFrame:
     codegen integer/float arithmetic (functions/cells.py layout:
     (level << 58) + (x << 29) + y), so the operator is 100% JVM.
     """
-    from geo_import_spark.functions import cells as cellmod
-
     n = float(1 << level)
     mask = (1 << 29) - 1
     agg = points.groupBy(
@@ -224,18 +159,8 @@ def density_contours(points: DataFrame, level: int = 4,
     Output: (y, x0, x1, n_cells, n_points, lon_min, lat_min, lon_max,
     lat_max) — one row per maximal horizontal run of dense cells.
     """
-    from pyspark.sql import Window
-
-    n = 1 << level
-    nf = float(n)
-    gx = F.greatest(
-        F.least(F.floor((F.col("lon") + 180.0) / 360.0 * n).cast("long"), F.lit(n - 1)),
-        F.lit(0),
-    )
-    gy = F.greatest(
-        F.least(F.floor((90.0 - F.col("lat")) / 180.0 * n).cast("long"), F.lit(n - 1)),
-        F.lit(0),
-    )
+    nf = float(1 << level)
+    gx, gy = cellmod.grid_xy("lon", "lat", level)
     dense = (
         points.groupBy(gx.alias("x"), gy.alias("y"))
         .agg(F.count("*").alias("n_points"))
@@ -278,8 +203,6 @@ def hot_cells(points: DataFrame, level: int = 4, top: int = 20) -> DataFrame:
     Deterministic: ties in n_points break on cell_id ascending, so the
     LIMIT boundary is engine-independent.
     """
-    from geo_import_spark.functions import cells as cellmod
-
     cell = cellmod.cell_col("lon", "lat", level)
     counts = points.groupBy(cell.alias("cell_id")).agg(F.count("*").alias("n_points"))
     stats = counts.agg(
@@ -396,14 +319,7 @@ def idw_surface(points: DataFrame, value, level: int = 6) -> DataFrame:
     """
     n = 1 << level
     nf = float(n)
-    gx = F.greatest(
-        F.least(F.floor((F.col("lon") + 180.0) / 360.0 * F.lit(nf)).cast("long"), F.lit(n - 1)),
-        F.lit(0),
-    )
-    gy = F.greatest(
-        F.least(F.floor((90.0 - F.col("lat")) / 180.0 * F.lit(nf)).cast("long"), F.lit(n - 1)),
-        F.lit(0),
-    )
+    gx, gy = cellmod.grid_xy("lon", "lat", level)
     base = points.select(
         "lon", "lat", value.cast("long").alias("v"), gx.alias("gx"), gy.alias("gy")
     )
@@ -451,16 +367,7 @@ def sample_density_at_points(points: DataFrame, level: int = 6) -> DataFrame:
     the point side — the points themselves NEVER shuffle. At level 6
     that is <= 4096 rows against 10^12 points.
     """
-    n = 1 << level
-    nf = float(n)
-    gx = F.greatest(
-        F.least(F.floor((F.col("lon") + 180.0) / 360.0 * F.lit(nf)).cast("long"), F.lit(n - 1)),
-        F.lit(0),
-    )
-    gy = F.greatest(
-        F.least(F.floor((90.0 - F.col("lat")) / 180.0 * F.lit(nf)).cast("long"), F.lit(n - 1)),
-        F.lit(0),
-    )
+    gx, gy = cellmod.grid_xy("lon", "lat", level)
     cells = points.select("doc_id", gx.alias("x"), gy.alias("y"))
     grid = cells.groupBy("x", "y").agg(F.count("*").alias("cell_density"))
     return cells.join(F.broadcast(grid), ["x", "y"]).select(
@@ -491,15 +398,7 @@ def label_dense_regions(
     from geo_import_spark.operators import dedup as dedupmod
 
     n = 1 << level
-    nf = float(n)
-    gx = F.greatest(
-        F.least(F.floor((F.col("lon") + 180.0) / 360.0 * F.lit(nf)).cast("long"), F.lit(n - 1)),
-        F.lit(0),
-    )
-    gy = F.greatest(
-        F.least(F.floor((90.0 - F.col("lat")) / 180.0 * F.lit(nf)).cast("long"), F.lit(n - 1)),
-        F.lit(0),
-    )
+    gx, gy = cellmod.grid_xy("lon", "lat", level)
     # pad width sized from the level: lpad TRUNCATES strings longer
     # than the width (both engines), so a fixed 3 would silently
     # collide distinct cells at level >= 10 (4-digit coords); %0Nd
@@ -557,16 +456,7 @@ def tile_pyramid(points: DataFrame, max_level: int = QT_MAX_LEVEL) -> DataFrame:
     exact integer sums, so the rollup is bit-identical to the
     per-level GROUP BY the SQL mirror runs.
     """
-    n = 1 << max_level
-    nf = float(n)
-    gx = F.greatest(
-        F.least(F.floor((F.col("lon") + 180.0) / 360.0 * F.lit(nf)).cast("long"), F.lit(n - 1)),
-        F.lit(0),
-    )
-    gy = F.greatest(
-        F.least(F.floor((90.0 - F.col("lat")) / 180.0 * F.lit(nf)).cast("long"), F.lit(n - 1)),
-        F.lit(0),
-    )
+    gx, gy = cellmod.grid_xy("lon", "lat", max_level)
     finest = (
         points.groupBy(gx.alias("tx"), gy.alias("ty"))
         .agg(F.count("*").alias("n_points"))
@@ -703,16 +593,7 @@ def raster_convolve(points: DataFrame, level: int = CONV_LEVEL) -> DataFrame:
     points (edge cells simply sum the kernel taps that land on the
     grid, standard 'kernel crop' boundary handling).
     """
-    n = 1 << level
-    nf = float(n)
-    gx = F.greatest(
-        F.least(F.floor((F.col("lon") + 180.0) / 360.0 * F.lit(nf)).cast("long"), F.lit(n - 1)),
-        F.lit(0),
-    )
-    gy = F.greatest(
-        F.least(F.floor((90.0 - F.col("lat")) / 180.0 * F.lit(nf)).cast("long"), F.lit(n - 1)),
-        F.lit(0),
-    )
+    gx, gy = cellmod.grid_xy("lon", "lat", level)
     hist = points.groupBy(gx.alias("x"), gy.alias("y")).agg(
         F.count("*").alias("n_points")
     )
@@ -783,16 +664,7 @@ def tile_thin(points: DataFrame, level: int = THIN_LEVEL,
 
     Output: (x, y, doc_id, rk, n_in_tile), rk in 1..k.
     """
-    n = 1 << level
-    nf = float(n)
-    gx = F.greatest(
-        F.least(F.floor((F.col("lon") + 180.0) / 360.0 * F.lit(nf)).cast("long"), F.lit(n - 1)),
-        F.lit(0),
-    )
-    gy = F.greatest(
-        F.least(F.floor((90.0 - F.col("lat")) / 180.0 * F.lit(nf)).cast("long"), F.lit(n - 1)),
-        F.lit(0),
-    )
+    gx, gy = cellmod.grid_xy("lon", "lat", level)
     cells = points.select("doc_id", gx.alias("x"), gy.alias("y"))
     w = Window.partitionBy("x", "y").orderBy(
         F.md5(F.col("doc_id").cast("string")).asc(), F.col("doc_id").asc()

@@ -32,29 +32,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geo_import_spark.functions import cells as cellmod
+
 PART_LEVEL = 3  # 8x8 = at most 64 directories
 
 
 def cell_key(level: int = PART_LEVEL):
-    """Coarse partition cell of (lon, lat) as a 'x_y' string column —
-    the same clamp/floor grid arithmetic as tiling.py."""
-    n = 1 << level
-    nf = float(n)
-    gx = F.greatest(
-        F.least(
-            F.floor((F.col("lon") + 180.0) / 360.0 * F.lit(nf)).cast("long"),
-            F.lit(n - 1),
-        ),
-        F.lit(0),
-    )
-    gy = F.greatest(
-        F.least(
-            F.floor((90.0 - F.col("lat")) / 180.0 * F.lit(nf)).cast("long"),
-            F.lit(n - 1),
-        ),
-        F.lit(0),
-    )
-    return F.concat_ws("_", gx.cast("string"), gy.cast("string"))
+    """Coarse partition cell of (lon, lat) as a 'x_y' string column
+    over cells.grid_xy, the engine's grid formula. A null coordinate
+    gives a null key (concat, not concat_ws, which would skip the
+    null part)."""
+    gx, gy = cellmod.grid_xy("lon", "lat", level)
+    return F.concat(gx.cast("string"), F.lit("_"), gy.cast("string"))
 
 
 def write_cell_partitioned(

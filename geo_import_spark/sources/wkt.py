@@ -228,43 +228,42 @@ def format_wkt(geom) -> "F.Column":
                 c)).cast("long")
         )
 
-    def vstr(i):  # i: 1-based vertex index column
+    def vstr(i):  # i: 0-based vertex index column
         return F.concat(
-            as_int(F.element_at(xs, i)).cast("string"),
+            as_int(F.element_at(xs, i + 1)).cast("string"),
             F.lit(" "),
-            as_int(F.element_at(ys, i)).cast("string"),
+            as_int(F.element_at(ys, i + 1)).cast("string"),
         )
+
+    def span(lo, hi, what):
+        """0-based indices lo..hi-1, raising on an empty group: Spark's
+        sequence steps backwards when its start passes its stop, which
+        would emit reversed garbage vertices."""
+        return F.when(hi > lo, F.sequence(lo, hi - 1)).otherwise(
+            F.raise_error(F.format_string(
+                f"format_wkt: empty {what} at offsets %s..%s", lo, hi)
+            ).cast("array<int>")
+        )
+
+    def group(lo, hi, what, fmt):  # "fmt(lo), ..., fmt(hi - 1)"
+        return F.array_join(F.transform(span(lo, hi, what), fmt), ", ")
 
     def ring(r):  # r: 0-based ring index column -> "(x y, x y, ...)"
         lo = F.element_at(ro, r + 1)
         hi = F.element_at(ro, r + 2)
-        return F.concat(
-            F.lit("("),
-            F.array_join(
-                F.transform(F.sequence(lo + 1, hi), vstr), ", "),
-            F.lit(")"),
-        )
-
-    n_rings = F.size(ro) - 1
-    all_vertices = F.array_join(
-        F.transform(F.sequence(F.lit(1), F.size(xs)), vstr), ", ")
-    rings_grp = F.array_join(
-        F.transform(F.sequence(F.lit(0), n_rings - 1), ring), ", ")
+        return F.concat(F.lit("("), group(lo, hi, "ring", vstr), F.lit(")"))
 
     def part(p):  # 0-based part index -> "((ring), (ring))"
         lo = F.element_at(po, p + 1)
         hi = F.element_at(po, p + 2)
-        return F.concat(
-            F.lit("("),
-            F.array_join(F.transform(F.sequence(lo, hi - 1), ring), ", "),
-            F.lit(")"),
-        )
+        return F.concat(F.lit("("), group(lo, hi, "part", ring), F.lit(")"))
 
-    parts_grp = F.array_join(
-        F.transform(F.sequence(F.lit(0), F.size(po) - 2), part), ", ")
+    all_vertices = group(F.lit(0), F.size(xs), "vertex list", vstr)
+    rings_grp = group(F.lit(0), F.size(ro) - 1, "ring list", ring)
+    parts_grp = group(F.lit(0), F.size(po) - 1, "part list", part)
 
     out = (
-        F.when(gt == "Point", F.concat(F.lit("POINT ("), vstr(F.lit(1)), F.lit(")")))
+        F.when(gt == "Point", F.concat(F.lit("POINT ("), vstr(F.lit(0)), F.lit(")")))
         .when(gt == "LineString", F.concat(F.lit("LINESTRING "), ring(F.lit(0))))
         .when(gt == "MultiPoint",
               F.concat(F.lit("MULTIPOINT ("), all_vertices, F.lit(")")))

@@ -7,6 +7,7 @@ import json
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from geo_import_spark.functions import geomkern
 from geo_import_spark.sources import dispatch, geojson, wkt
@@ -166,3 +167,25 @@ def test_format_wkt_rejects_non_lattice(spark):
     )
     with pytest.raises(Exception, match="non-integer-lattice"):
         df.collect()
+
+
+@pytest.mark.parametrize("gtype, parts, rings, n, what", [
+    ("Polygon", [0, 1], [0, 4, 4, 8], 8, "empty ring at offsets 4..4"),
+    ("MultiLineString", [0, 3], [0, 4, 4, 8], 8, "empty ring at offsets 4..4"),
+    ("MultiPolygon", [0, 1, 1, 2], [0, 4, 8], 8, "empty part at offsets 1..1"),
+    ("LineString", [0, 1], [0, 0], 0, "empty ring at offsets 0..0"),
+    ("Polygon", [0, 0], [0], 0, "empty ring list at offsets 0..0"),
+    ("MultiPolygon", [0], [0], 0, "empty part list at offsets 0..0"),
+    ("MultiPoint", [0, 1], [0, 0], 0, "empty vertex list at offsets 0..0"),
+])
+def test_format_wkt_rejects_empty_ring_or_part(spark, gtype, parts, rings, n, what):
+    """Offsets with an empty ring, part or group (the GeoJSON decoder
+    can emit them; the WKT parser cannot) raise naming the offsets.
+    Spark's sequence steps backwards over an empty span, so the first
+    three rows formatted reversed garbage vertices without an error."""
+    xs = [float(v) for v in (0, 10, 10, 0, 20, 30, 30, 20)][:n]
+    df = spark.createDataFrame(
+        [((gtype, parts, rings, xs, xs),)], T.StructType([T.StructField("geom", geojson.GEOM_TYPE)])
+    )
+    with pytest.raises(Exception, match=what):
+        df.select(wkt.format_wkt(F.col("geom")).alias("w")).collect()
