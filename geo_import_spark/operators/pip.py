@@ -13,30 +13,23 @@ new engine's core physical strategy (§4.2.1-2):
   3. equi-join on cell_id (hash/sort-merge; cell ids are Morton codes so
      range partitioning is spatial partitioning), AQE skew-join as the
      backstop for hot cells, optional explicit salting
-  4. exact even-odd ray-cast refinement in one vectorized pandas UDF
-     body (_refine): each Arrow batch groups candidates by poly_id and
-     casts all of a polygon's points at once. Broadcast mode reads the
-     rings from an sc.broadcast (one copy per executor), so
-     Python-bridge bytes are O(candidates) + O(polygons) — never
-     O(pairs x vertices); shuffle mode reads them from joined columns
-  5. rectangle fast path (broadcast mode): polygons whose even-odd
-     interior IS their bbox are flagged once at collect time; the JVM
-     decides strictly-interior candidates inside whole-stage codegen
-     and the refine skips the ray cast for them (single point-side
-     pass — no union re-scan). Boundary candidates and non-rectangular
-     polygons keep the exact ray cast, so results are bit-identical
-     to the pure-UDF plan
+  4. JVM bbox filter on the candidates, then a join on poly_id brings
+     each survivor its polygon's rings (ring_offsets, xs, ys)
+  5. exact even-odd ray-cast refinement in one vectorized pandas UDF
+     (_pip_joined_rings): each Arrow batch groups candidates by
+     poly_id and casts all of a polygon's points at once
 
 Scale notes (100 TB): the shuffle key is cell_id — bounded fan-out on
-both sides (points x |levels|, polys x max_cells). The physical plan
-is AUTO-SELECTED by a one-job size estimate of the polygon side
-(which also collects its distinct cover levels):
-within the broadcast budget the point side is never shuffled at all;
-beyond it the shuffle join is chosen — the driver never collects an
-unbounded polygon side. Hot cells (a city cell holding millions of
-points) in the shuffle fallback are handled by `salt_factor`: points get
-pmod(hash, s), polygons replicate x s, join key becomes
-(cell_id, salt) — an s-way split of every hot cell's hash bucket.
+both sides (points x |levels|, polys x max_cells). There is ONE plan;
+one aggregate job over the polygon side (_side_stats) sizes it and
+collects its distinct cover levels, and decides the replication once:
+within the broadcast budget both polygon-side frames carry a
+broadcast hint and the point side is never shuffled; beyond it the
+same joins shuffle. The driver never collects the polygon side. Hot
+cells (a city cell holding millions of points) in shuffle mode are
+handled by `salt_factor`: points get pmod(hash, s), polygons
+replicate x s, join key becomes (cell_id, salt) — an s-way split of
+every hot cell's hash bucket.
 """
 
 from __future__ import annotations
@@ -58,71 +51,16 @@ log = logging.getLogger("geo_import_spark.pip")
 # session's autoBroadcastJoinThreshold default). Above it, pip_join
 # auto-selects the shuffle join — never a driver collect.
 BROADCAST_BUDGET_BYTES = 64 * 1024 * 1024
-# Per-polygon fixed cost in the broadcast estimate: dict entry, cover
-# rows (<= max_cells longs + bbox), Row overhead.
+# Per-polygon fixed cost in the broadcast estimate: cover rows
+# (<= max_cells longs + bbox), ring row, hash-relation overhead.
 _POLY_OVERHEAD_BYTES = 1024
-
-# Ring broadcasts created by broadcast-mode pip_join calls; a Spark
-# broadcast lives on driver + executors until destroyed, so LONG-LIVED
-# sessions issuing many pip_joins should call release_ring_broadcasts()
-# once the returned DataFrames are no longer needed.
-_RING_BROADCASTS: list = []
 
 
 def release_ring_broadcasts() -> int:
-    """Destroy every polygon-ring broadcast created by pip_join in this
-    session. Call after the DataFrames returned by broadcast-mode
-    pip_join calls are fully consumed (their plans reference the
-    broadcast and would fail if executed after this). Returns the
-    number destroyed."""
-    n = 0
-    while _RING_BROADCASTS:
-        bc = _RING_BROADCASTS.pop()
-        try:
-            bc.destroy()
-            n += 1
-        except Exception:  # already destroyed / context gone
-            pass
-    return n
-
-
-def _refine(lon: pd.Series, lat: pd.Series, poly_id: pd.Series, decided: np.ndarray, ring_of) -> pd.Series:
-    """The refine body of both plans: exact even-odd ray cast of one
-    Arrow batch of (point, polygon) candidates. Rows already decided
-    by the JVM rectangle fast path are accepted as they are; the rest
-    are grouped by poly_id so each polygon's edge arrays are built
-    once (geomkern.points_in_single_polygon). ring_of(poly_id, row)
-    returns that polygon's (ring_offsets, xs, ys), or None."""
-    from geo_import_spark.functions.geomkern import points_in_single_polygon
-
-    res = decided.copy()
-    todo = np.flatnonzero(~res)
-    if todo.size == 0:
-        return pd.Series(res)
-    px = lon.to_numpy(np.float64)[todo]
-    py = lat.to_numpy(np.float64)[todo]
-    codes, uniques = pd.factorize(poly_id.to_numpy()[todo], sort=False)
-    order = np.argsort(codes, kind="stable")
-    for idx in np.split(order, np.flatnonzero(np.diff(codes[order])) + 1):
-        code = codes[idx[0]]
-        geom = ring_of(uniques[code], todo[idx[0]]) if code >= 0 else None
-        if geom is not None:
-            res[todo[idx]] = points_in_single_polygon(px[idx], py[idx], *geom)
-    return pd.Series(res)
-
-
-def _pip_broadcast_udf(rings_bc):
-    """Broadcast-mode refine: rings come from a Spark broadcast (one
-    copy per executor), so the bridge carries O(candidates) bytes;
-    `exact` marks the rows the rectangle fast path already accepted."""
-
-    @pandas_udf(T.BooleanType())
-    def contains(lon: pd.Series, lat: pd.Series, poly_id: pd.Series, exact: pd.Series) -> pd.Series:
-        polys = rings_bc.value
-        decided = exact.fillna(False).to_numpy(bool)
-        return _refine(lon, lat, poly_id, decided, lambda pid, _row: polys.get(pid))
-
-    return contains
+    """No-op kept for callers that release per-pass state: pip_join
+    creates no broadcast variable (both modes join the rings as
+    columns), so there is nothing to destroy. Returns 0."""
+    return 0
 
 
 @pandas_udf(T.BooleanType())
@@ -130,54 +68,29 @@ def _pip_joined_rings(
     lon: pd.Series, lat: pd.Series, poly_id: pd.Series,
     ring_offsets: pd.Series, xs: pd.Series, ys: pd.Series,
 ) -> pd.Series:
-    """Shuffle-mode refine: each candidate row carries its polygon's
-    rings as joined columns; the first row of a poly_id group serves
-    the whole group."""
+    """The refine: exact even-odd ray cast of one Arrow batch of
+    (point, polygon) candidates. Each row carries its polygon's rings
+    as joined columns; candidates are grouped by poly_id so the first
+    row of a group serves the whole group and each polygon's edge
+    arrays are built once (geomkern.points_in_single_polygon)."""
+    from geo_import_spark.functions.geomkern import points_in_single_polygon
 
-    def ring_of(_pid, row):
-        return (
+    res = np.zeros(len(lon), dtype=bool)
+    if not len(res):
+        return pd.Series(res)
+    px = lon.to_numpy(np.float64)
+    py = lat.to_numpy(np.float64)
+    codes, _ = pd.factorize(poly_id.to_numpy(), sort=False)
+    order = np.argsort(codes, kind="stable")
+    for idx in np.split(order, np.flatnonzero(np.diff(codes[order])) + 1):
+        row = idx[0]
+        res[idx] = points_in_single_polygon(
+            px[idx], py[idx],
             np.asarray(ring_offsets.iat[row], dtype=np.int64),
             np.asarray(xs.iat[row], dtype=np.float64),
             np.asarray(ys.iat[row], dtype=np.float64),
         )
-
-    return _refine(lon, lat, poly_id, np.zeros(len(lon), dtype=bool), ring_of)
-
-
-COVER_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("poly_id", T.StringType()),
-        T.StructField("minx", T.DoubleType()),
-        T.StructField("miny", T.DoubleType()),
-        T.StructField("maxx", T.DoubleType()),
-        T.StructField("maxy", T.DoubleType()),
-        T.StructField("level", T.IntegerType()),
-        T.StructField("cell_id", T.LongType()),
-        T.StructField("is_rect", T.BooleanType()),
-    ]
-)
-
-
-def _is_exact_bbox(ro: np.ndarray, xs: np.ndarray, ys: np.ndarray) -> bool:
-    """True iff the polygon's even-odd interior IS its bbox: a single
-    closed 5-vertex ring whose 4 distinct corners are exactly the bbox
-    corners with every edge axis-aligned (the edge check rules out the
-    bowtie orderings, whose even-odd interior is NOT the bbox).
-    Drives the rectangle fast path: for such polygons the JVM bbox
-    prefilter already decides strict-interior containment exactly, so
-    those candidates never need the Python ray cast."""
-    if len(ro) != 2 or ro[0] != 0 or ro[1] != 5 or xs.size != 5:
-        return False
-    if xs[0] != xs[4] or ys[0] != ys[4]:
-        return False
-    minx, maxx = xs.min(), xs.max()
-    miny, maxy = ys.min(), ys.max()
-    if minx == maxx or miny == maxy:
-        return False
-    corners = set(zip(xs[:4].tolist(), ys[:4].tolist()))
-    if corners != {(minx, miny), (maxx, miny), (maxx, maxy), (minx, maxy)}:
-        return False
-    return all(xs[i] == xs[i + 1] or ys[i] == ys[i + 1] for i in range(4))
+    return pd.Series(res)
 
 
 def _covered(polygons: DataFrame, base_level: int, max_cells: int) -> DataFrame:
@@ -186,7 +99,8 @@ def _covered(polygons: DataFrame, base_level: int, max_cells: int) -> DataFrame:
     cover level (cells.cover_level_col) and cover cells
     (cells.cover_col) — JVM expressions only; each query on it prunes
     the columns it does not read. An empty polygon has a null bbox
-    and null cells, so exploding its cells yields no row."""
+    and null cells, so its cover row has a null cell_id that joins
+    nothing."""
     box = ("minx", "miny", "maxx", "maxy")
     return (
         polygons.select(
@@ -202,33 +116,6 @@ def _covered(polygons: DataFrame, base_level: int, max_cells: int) -> DataFrame:
         .withColumn("level", cellmod.cover_level_col(*box, base_level, max_cells))
         .withColumn("cells", cellmod.cover_col(*box, "level"))
     )
-
-
-def _collect_rings_and_cover(covered: DataFrame):
-    """ONE driver collect of the prepared polygon side (_covered). The
-    driver only flattens the JVM-computed cell arrays into cover rows
-    and flags exact rectangles — fine by definition, since broadcast
-    mode is only chosen when the polygon side fits the broadcast
-    budget.
-
-    Returns (rings: dict poly_id -> (ring_offsets, xs, ys),
-             cover_rows: list of COVER_ROW_SCHEMA tuples,
-             levels: sorted distinct cover levels)."""
-    rings: dict = {}
-    cover_rows: list = []
-    levels: set = set()
-    for r in covered.collect():
-        ro = np.asarray(r["ring_offsets"], dtype=np.int64)
-        xs = np.asarray(r["xs"], dtype=np.float64)
-        ys = np.asarray(r["ys"], dtype=np.float64)
-        rings[r["poly_id"]] = (ro, xs, ys)
-        if not r["cells"]:
-            continue
-        levels.add(r["level"])
-        head = (r["poly_id"], r["minx"], r["miny"], r["maxx"], r["maxy"], r["level"])
-        rect = _is_exact_bbox(ro, xs, ys)
-        cover_rows.extend((*head, cid, rect) for cid in r["cells"])
-    return rings, cover_rows, sorted(levels)
 
 
 # Auto-salting knobs (shuffle mode): a cell is "hot" when it exceeds
@@ -249,13 +136,16 @@ def auto_salt_factor(points: DataFrame, level: int) -> int:
     COARSEST cover level (coarser cells are strictly hotter, so this
     bounds every level the join actually uses). Returns 1 (no salting)
     for uniform corpora — identical output either way; only the
-    physical partitioning changes.
+    physical partitioning changes. Points with a null coordinate join
+    no cell, so they are not counted.
     """
     import math
 
-    cell = cellmod.cell_col("lon", "lat", level)
-    counts = points.groupBy(cell.alias("cell_id")).agg(
-        F.count("*").alias("n")
+    counts = (
+        points.select(cellmod.cell_col("lon", "lat", level).alias("cell_id"))
+        .where("cell_id IS NOT NULL")
+        .groupBy("cell_id")
+        .agg(F.count("*").alias("n"))
     )
     row = counts.agg(F.max("n").alias("mx"), F.sum("n").alias("total")).collect()[0]
     if not row["total"]:
@@ -284,8 +174,8 @@ def estimate_polygon_side_bytes(polygons: DataFrame) -> tuple[int, int]:
     """(n_polys, estimated broadcast bytes) for the polygon side — one
     column-pruned aggregate job: rows x fixed overhead + vertices x 16
     bytes (two float64 per vertex). Drives the auto broadcast/shuffle
-    plan choice; deliberately conservative (counts cover + dict + Row
-    overhead per polygon)."""
+    plan choice; deliberately conservative (counts cover rows, ring
+    row and hash-relation overhead per polygon)."""
     n, est, _ = _side_stats(_covered(polygons, 13, 64))
     return n, est
 
@@ -304,61 +194,63 @@ def pip_join(
     (point, polygon) containment. `points` needs lon/lat; `polygons`
     needs poly_id + flat geom.
 
-    broadcast_polys="auto" (default): ONE column-pruned aggregate
-    estimates the polygon side (rows x overhead + vertices x 16 bytes)
-    and collects its distinct cover levels, and picks broadcast iff
-    the estimate fits broadcast_budget_bytes — the
-    driver never collects an unbounded polygon side. The choice is
-    logged. True/False force a path (tests / operator override).
+    ONE column-pruned aggregate runs in every mode: it estimates the
+    polygon side (rows x overhead + vertices x 16 bytes) and collects
+    its distinct cover levels, which the point side's explode needs.
+    broadcast_polys="auto" (default) picks broadcast iff the estimate
+    fits broadcast_budget_bytes; the choice is logged. True/False
+    force a mode (tests / operator override).
 
-    broadcast mode: the polygon side — JVM-computed cover cells AND
-    ring coordinates — is collected ONCE and shipped per executor
-    (local-relation broadcast join + sc.broadcast rings). The Python
-    bridge then carries only (lon, lat, poly_id) per candidate: bytes
-    are O(candidates) + O(polygons), never O(pairs x vertices).
+    One plan in both modes: the cover rows (poly_id, bbox, one cell
+    id each, exploded from _covered) join the point side on cell_id,
+    a JVM bbox filter drops most false candidates, and the survivors
+    join their polygon's rings on poly_id and go through the one
+    Arrow refine (_pip_joined_rings). The Python bridge carries each
+    candidate with its polygon's rings: bytes are O(candidates x
+    vertices of its polygon).
+
+    broadcast mode: both polygon-side frames carry a broadcast hint,
+    so the point side is never shuffled (BroadcastHashJoin twice).
+    Nothing is collected to the driver beyond the size job.
 
     shuffle mode: the at-scale fallback when the polygon side exceeds
-    the broadcast budget — shuffle join on cell_id (AQE skew-join /
-    explicit salting) with polygon coords joined per candidate. The
-    cover is exploded from cells.cover_col inside the join's
-    execution, so nothing is persisted and the only Python stage is
-    the refine.
+    the broadcast budget — the same joins without the hint, so Spark
+    shuffles on cell_id (AQE skew-join / explicit salting) and on
+    poly_id. Nothing is persisted and the only Python stage is the
+    refine.
 
     salt_factor=None (default) is MEASURED in shuffle mode: one
     histogram aggregate (auto_salt_factor — the hot_cells diagnostic
     reduced to a decision) picks the factor that splits the hottest
     cell under HOT_CELL_LOAD_FACTOR x the mean partition load; uniform
     corpora get 1 (no salting, no polygon replication). Pass an int to
-    force (1 disables). Broadcast mode never salts — there is no
-    point-side shuffle to skew.
+    force (1 disables). Broadcast mode never measures one — there is
+    no point-side shuffle to skew.
     """
     spark = points.sparkSession
-    empty = points.select(*point_cols).limit(0).withColumn("poly_id", F.lit(""))
     covered = _covered(polygons, base_level, max_cells)
-
-    if broadcast_polys == "auto" or not broadcast_polys:
-        # One aggregate sizes the polygon side AND collects its
-        # distinct cover levels (all the shuffle plan needs from it).
-        n_polys, est_bytes, levels = _side_stats(covered)
-        if broadcast_polys == "auto":
-            broadcast_polys = est_bytes <= broadcast_budget_bytes
-            log.info(
-                "pip_join auto plan: polygon side ~%d bytes (%d polys) -> %s",
-                est_bytes, n_polys, "broadcast" if broadcast_polys else "shuffle",
-            )
-
-    if broadcast_polys:
-        rings, cover_rows, levels = _collect_rings_and_cover(covered)
-        if not cover_rows:
-            return empty
-        cover = F.broadcast(spark.createDataFrame(cover_rows, COVER_ROW_SCHEMA))
-    else:
-        if not levels:
-            return empty
-        cover = covered.select(
-            "poly_id", "minx", "miny", "maxx", "maxy",
-            F.explode("cells").alias("cell_id"),
+    # One aggregate sizes the polygon side AND collects its distinct
+    # cover levels (all the plan needs from it before it runs).
+    n_polys, est_bytes, levels = _side_stats(covered)
+    if broadcast_polys == "auto":
+        broadcast_polys = est_bytes <= broadcast_budget_bytes
+        log.info(
+            "pip_join auto plan: polygon side ~%d bytes (%d polys) -> %s",
+            est_bytes, n_polys, "broadcast" if broadcast_polys else "shuffle",
         )
+    if not levels:
+        return points.select(*point_cols).limit(0).withColumn("poly_id", F.lit(""))
+
+    # explode_outer, not explode: for an inner explode Spark infers
+    # size(cells) > 0 and pushes it into the polygon scan, where the
+    # cover-level lambda is inlined once per reference to `level` (a
+    # plan of megabytes). The null cell_id of an empty polygon joins
+    # nothing.
+    cover = covered.select(
+        "poly_id", "minx", "miny", "maxx", "maxy",
+        F.explode_outer("cells").alias("cell_id"),
+    )
+    rings = covered.select("poly_id", "ring_offsets", "xs", "ys")
 
     # Point side stays 100% JVM (cells.cell_col — whole-stage codegen):
     # one scan, explode over the distinct cover levels (usually 2-4).
@@ -386,6 +278,9 @@ def pip_join(
     else:
         join_keys = ["cell_id"]
 
+    if broadcast_polys:
+        cover, rings = F.broadcast(cover), F.broadcast(rings)
+
     # JVM-side bbox pre-filter kills most false candidates inside
     # whole-stage codegen; only bbox-passing pairs reach the Python
     # ray cast (for convex/rectangular polygons that's ~the hit set).
@@ -393,37 +288,7 @@ def pip_join(
         (F.col("lon") >= F.col("minx")) & (F.col("lon") <= F.col("maxx"))
         & (F.col("lat") >= F.col("miny")) & (F.col("lat") <= F.col("maxy"))
     )
-
-    if broadcast_polys:
-        # Rectangle fast path: for polygons whose even-odd interior IS
-        # their bbox (_is_exact_bbox, decided once per polygon at
-        # collect time), a strictly-interior candidate is contained by
-        # definition — the JVM computes that verdict inside whole-stage
-        # codegen and the Arrow UDF skips the ray cast for those rows.
-        # Boundary candidates (lon/lat == a bbox edge) and
-        # non-rectangular polygons are still ray-cast, so semantics are
-        # bit-identical to the pure-UDF plan. Deliberately ONE pass —
-        # a filter/union split would re-scan and re-join the point
-        # side (2x IO at scale), which costs more than the
-        # O(candidates) bridge bytes it saves.
-        strict = (
-            (F.col("lon") > F.col("minx")) & (F.col("lon") < F.col("maxx"))
-            & (F.col("lat") > F.col("miny")) & (F.col("lat") < F.col("maxy"))
-        )
-        rings_bc = spark.sparkContext.broadcast(rings)
-        _RING_BROADCASTS.append(rings_bc)
-        contains = _pip_broadcast_udf(rings_bc)(
-            "lon", "lat", "poly_id", F.col("is_rect") & strict
-        )
-        return cand.filter(contains).select(*point_cols, "poly_id")
-
-    polys_geom = polygons.select(
-        "poly_id",
-        F.col("geom.ring_offsets").alias("ring_offsets"),
-        F.col("geom.xs").alias("xs"),
-        F.col("geom.ys").alias("ys"),
-    )
-    refined = cand.select(*point_cols, "lon", "lat", "poly_id").join(polys_geom, "poly_id")
+    refined = cand.select(*point_cols, "lon", "lat", "poly_id").join(rings, "poly_id")
     return refined.filter(
         _pip_joined_rings("lon", "lat", "poly_id", "ring_offsets", "xs", "ys")
     ).select(*point_cols, "poly_id")

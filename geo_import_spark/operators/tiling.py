@@ -203,8 +203,14 @@ def hot_cells(points: DataFrame, level: int = 4, top: int = 20) -> DataFrame:
     Deterministic: ties in n_points break on cell_id ascending, so the
     LIMIT boundary is engine-independent.
     """
-    cell = cellmod.cell_col("lon", "lat", level)
-    counts = points.groupBy(cell.alias("cell_id")).agg(F.count("*").alias("n_points"))
+    # A point with a null coordinate is in no cell: it is neither a
+    # hot cell nor part of the mean load.
+    counts = (
+        points.select(cellmod.cell_col("lon", "lat", level).alias("cell_id"))
+        .where("cell_id IS NOT NULL")
+        .groupBy("cell_id")
+        .agg(F.count("*").alias("n_points"))
+    )
     stats = counts.agg(
         F.sum("n_points").alias("total"), F.count("*").alias("n_cells")
     )
@@ -454,11 +460,14 @@ def tile_pyramid(points: DataFrame, max_level: int = QT_MAX_LEVEL) -> DataFrame:
     reference the frame ~2x(max_level+1) times); each coarser level
     ROLLS UP from the previous with a tiny grid-bounded aggregate —
     exact integer sums, so the rollup is bit-identical to the
-    per-level GROUP BY the SQL mirror runs.
+    per-level GROUP BY the SQL mirror runs. A point with a null
+    coordinate is in no tile.
     """
     gx, gy = cellmod.grid_xy("lon", "lat", max_level)
     finest = (
-        points.groupBy(gx.alias("tx"), gy.alias("ty"))
+        points.select(gx.alias("tx"), gy.alias("ty"))
+        .where("tx IS NOT NULL AND ty IS NOT NULL")
+        .groupBy("tx", "ty")
         .agg(F.count("*").alias("n_points"))
         .withColumn("level", F.lit(max_level))
         .localCheckpoint()

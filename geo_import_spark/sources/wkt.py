@@ -15,8 +15,11 @@ Grammar coverage: POINT, MULTIPOINT (both the double-paren and the
 bare comma syntax), LINESTRING, MULTILINESTRING, POLYGON,
 MULTIPOLYGON; optional Z/M/ZM dimension markers (extra ordinates
 parsed and dropped — the shapefile decoder's Z/M policy); EMPTY at
-any level -> SoQLNull geometry (the P5 empty-geometry rule). Vertex
-guard: geomkern.MAX_VERTICES_PER_ROW, same as every other decoder.
+any level -> SoQLNull geometry (the P5 empty-geometry rule). Only
+MULTIPOINT may parenthesize its positions, and every polygon ring
+must be closed with at least 4 positions; anything else is an error
+row. Vertex guard: geomkern.MAX_VERTICES_PER_ROW, same as every other
+decoder.
 
 Coordinates pass through geomkern.flatten_geojson_coords — WKT is
 parsed into GeoJSON-shaped nested lists first, so the arity checks
@@ -95,8 +98,10 @@ def _parse_position(tok: str) -> list[float]:
     return nums[:2]  # Z/M ordinates parsed then dropped
 
 
-def _parse_nested(s: str, depth: int) -> list:
-    """Parse a paren group at the given GeoJSON nesting depth."""
+def _parse_nested(s: str, depth: int, paren_points: bool = False) -> list:
+    """Parse a paren group at the given GeoJSON nesting depth. Only a
+    MULTIPOINT body (`paren_points`) may wrap its positions in
+    parentheses."""
     if depth == 0:
         return _parse_position(_strip_parens(s))
     body = _strip_parens(s)
@@ -108,13 +113,21 @@ def _parse_nested(s: str, depth: int) -> list:
         for it in items:
             it = it.strip()
             # MULTIPOINT accepts both "(1 2), (3 4)" and "1 2, 3 4"
-            out.append(
-                _parse_position(_strip_parens(it))
-                if it.startswith("(")
-                else _parse_position(it)
-            )
+            if it.startswith("("):
+                if not paren_points:
+                    raise ValueError(f"parenthesized position {it[:30]!r}")
+                it = _strip_parens(it)
+            out.append(_parse_position(it))
         return out
     return [_parse_nested(it.strip(), depth - 1) for it in items]
+
+
+def _check_ring(ring: list) -> None:
+    """A polygon ring is closed and has at least 4 positions."""
+    if len(ring) < 4:
+        raise ValueError(f"polygon ring has {len(ring)} positions, needs >= 4")
+    if ring[0] != ring[-1]:
+        raise ValueError("polygon ring is not closed")
 
 
 def parse_wkt_text(txt: str):
@@ -141,7 +154,11 @@ def parse_wkt_text(txt: str):
     gtype = _TYPES[tag]
     if rest.upper() == "EMPTY":
         return "EMPTY", None
-    coords = _parse_nested(rest, _DEPTH[gtype])
+    coords = _parse_nested(rest, _DEPTH[gtype], paren_points=gtype == "MultiPoint")
+    if gtype in ("Polygon", "MultiPolygon"):
+        for poly in [coords] if gtype == "Polygon" else coords:
+            for ring in poly:
+                _check_ring(ring)
     return gtype, coords
 
 

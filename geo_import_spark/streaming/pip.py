@@ -1,13 +1,13 @@
 """Streaming point-in-polygon: the flagship spatial join over a
 point STREAM (readStream) against a static polygon dimension.
 
-The batch pip_join's broadcast path is already the right streaming
-plan: the polygon side is collected and broadcast at PLAN time (it is
-static), the streaming point side computes its cover cells in
-whole-stage codegen, joins the broadcast cover relation
-(stream-static BroadcastHashJoin — no state store, no watermark
-needed), and the exact ray-cast refinement runs in the same Arrow
-batch UDF per micro-batch. Output is append-mode: each containment
+The batch pip_join's broadcast mode is already the right streaming
+plan: the polygon side is static, so its cover and its rings carry a
+broadcast hint; the streaming point side computes its cover cells in
+whole-stage codegen, joins the broadcast cover and then the broadcast
+rings (stream-static BroadcastHashJoins — no state store, no
+watermark needed), and the exact ray-cast refinement runs in the same
+Arrow batch UDF per micro-batch. Output is append-mode: each containment
 row is emitted exactly once in the micro-batch that carried its
 point, so a 100-TB backfill and a live tail produce identical rows
 (asserted against batch pip_join in tests/test_streaming_pip.py).

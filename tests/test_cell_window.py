@@ -13,6 +13,7 @@ from geo_import_spark.functions import cells as cellmod
 from geo_import_spark.functions import tiles as tilemod
 from geo_import_spark.operators import dbscan, spatialstats, tiling
 from geo_import_spark.operators import knn as knnmod
+from geo_import_spark.operators import pip as pipmod
 from geo_import_spark.plans import partitioned
 
 
@@ -120,6 +121,19 @@ def test_null_coordinate_lands_in_no_cell(spark):
         if rows(op(pts), keys) != exp:
             counted.append(name)
     assert counted == [], f"null point counted in a real cell by {counted}"
+
+    # Nor is the null group a unit of its own: no hot cell, tile or
+    # forced leaf, no share of the mean cell load, no salt for it.
+    whole = {
+        "hot_cells": lambda p: tiling.hot_cells(p, level=6),
+        "tile_pyramid": lambda p: tiling.tile_pyramid(p, max_level=3),
+        "adaptive_tiles": lambda p: tiling.adaptive_tiles(p, max_level=3, max_per_tile=2),
+    }
+    for name, op in whole.items():
+        assert set(map(tuple, op(pts).collect())) == set(map(tuple, op(pts_real).collect())), name
+    assert pipmod.auto_salt_factor(frame(real + nulls * 10), 6) == pipmod.auto_salt_factor(
+        pts_real, 6
+    )
 
     media = pts.select("doc_id", F.lit(2).alias("span_offset"), F.lit("m").alias("media_ref"))
     anchors = pts.select("doc_id", "lon", "lat")

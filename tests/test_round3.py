@@ -1,5 +1,5 @@
 """Round-3 regression tests: PIP auto plan selection, JVM cover-level
-parity, persisted-RDD hygiene, and broadcast cleanup."""
+parity, persisted-RDD hygiene and PIP plan shape."""
 
 import numpy as np
 import pandas as pd
@@ -46,25 +46,35 @@ def test_cover_level_col_matches_numpy(spark):
 
 
 def test_auto_plan_selection(docs, spark, sf_dir):
-    """broadcast_polys='auto' picks broadcast within budget (rings
-    broadcast created) and shuffle beyond it (no driver collect of the
-    polygon side, no rings broadcast) — identical results either way."""
+    """broadcast_polys='auto' broadcasts the polygon side within budget
+    and shuffles beyond it — identical results either way. Spark's own
+    size-based broadcast is off here, so the join kind in the executed
+    plan comes from pip_join's choice alone."""
     points = geojson.point_spans(docs)
     polys = corpus.polygons(spark, sf_dir)
 
     n_polys, est = pipmod.estimate_polygon_side_bytes(polys)
     assert n_polys == 100 and est > 0
 
-    n_bc0 = len(pipmod._RING_BROADCASTS)
-    a = pipmod.pip_join(points, polys, broadcast_polys="auto").toPandas()
-    assert len(pipmod._RING_BROADCASTS) == n_bc0 + 1  # broadcast chosen
+    def run(budget):
+        df = pipmod.pip_join(
+            points, polys, broadcast_polys="auto", broadcast_budget_bytes=budget
+        )
+        out = df.toPandas()
+        return out, df._jdf.queryExecution().executedPlan().toString()
 
-    # Tiny budget forces the shuffle plan: no new rings broadcast.
-    n_bc1 = len(pipmod._RING_BROADCASTS)
-    b = pipmod.pip_join(
-        points, polys, broadcast_polys="auto", broadcast_budget_bytes=16
-    ).toPandas()
-    assert len(pipmod._RING_BROADCASTS) == n_bc1
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        a, plan_a = run(pipmod.BROADCAST_BUDGET_BYTES)
+        # Tiny budget forces the shuffle plan: no broadcast of the cover.
+        b, plan_b = run(16)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    for key in ("cell_id", "poly_id"):
+        assert f"BroadcastHashJoin [{key}#" in plan_a, key
+        assert f"BroadcastHashJoin [{key}#" not in plan_b, key
+        assert f"SortMergeJoin [{key}#" in plan_b, key
 
     key = ["doc_id", "span_offset", "poly_id"]
     pd.testing.assert_frame_equal(
@@ -94,20 +104,36 @@ def test_no_persisted_rdds_after_shuffle_pip(docs, spark, sf_dir):
 
 
 def test_shuffle_pip_refine_is_the_only_python_stage(docs, spark, sf_dir):
-    """Shuffle mode computes the polygon cover in the JVM
-    (cells.cover_col), so the refine is the plan's only Arrow UDF."""
+    """Both modes compute the polygon cover in the JVM
+    (cells.cover_col), so in shuffle mode and in broadcast mode the
+    refine is the plan's only Arrow UDF."""
     points = geojson.point_spans(docs)
     polys = corpus.polygons(spark, sf_dir)
-    out = pipmod.pip_join(points, polys, broadcast_polys=False, salt_factor=1)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython [") == 1
+    for broadcast in (False, True):
+        out = pipmod.pip_join(points, polys, broadcast_polys=broadcast, salt_factor=1)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython [") == 1, broadcast
 
 
-def test_pip_prepares_polygon_side_in_at_most_two_jobs(docs, spark, sf_dir):
-    """Before its result runs, pip_join spends at most two jobs in
-    either mode: broadcast = size estimate + rings collect; shuffle =
-    size estimate (which also collects the distinct cover levels) +
-    the auto-salt histogram. AQE is off here because it submits each
+@pytest.mark.parametrize("broadcast", [True, False], ids=["broadcast", "shuffle"])
+def test_pip_plan_holds_the_cover_level_lambda_once(docs, spark, sf_dir, broadcast):
+    """The optimized plan holds cells.cover_level_col's lambda once.
+    An inner explode of the cover cells lets Spark infer
+    size(cells) > 0 and push it into the polygon scan, where the
+    lambda is inlined once per reference to the level (117 copies on
+    this corpus)."""
+    points = geojson.point_spans(docs)
+    polys = corpus.polygons(spark, sf_dir)
+    out = pipmod.pip_join(points, polys, broadcast_polys=broadcast, salt_factor=1)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("coalesce(array_max(filter(") == 1
+
+
+def test_pip_prepares_polygon_side_in_one_job_broadcast_two_shuffle(docs, spark, sf_dir):
+    """Before its result runs, pip_join spends one job in broadcast
+    mode (the size estimate, which also collects the distinct cover
+    levels) and at most two in shuffle mode (the same job + the
+    auto-salt histogram). AQE is off here because it submits each
     shuffle stage as a job of its own; without it one action is one
     job. The polygon side is cached first so that only pip_join's own
     jobs are counted, not the ones that build the input."""
@@ -118,7 +144,10 @@ def test_pip_prepares_polygon_side_in_at_most_two_jobs(docs, spark, sf_dir):
     old = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        for mode, budget in (("broadcast", pipmod.BROADCAST_BUDGET_BYTES), ("shuffle", 16)):
+        for mode, budget, most in (
+            ("broadcast", pipmod.BROADCAST_BUDGET_BYTES, 1),
+            ("shuffle", 16, 2),
+        ):
             group = f"pip-prepare-{mode}"
             sc.setJobGroup(group, "pip_join before execution")
             try:
@@ -126,7 +155,7 @@ def test_pip_prepares_polygon_side_in_at_most_two_jobs(docs, spark, sf_dir):
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
                 sc.setLocalProperty("spark.job.description", None)
-            assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2, mode
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) <= most, mode
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old)
         polys.unpersist()
@@ -304,16 +333,6 @@ def test_windowed_counts_streaming_smoke(spark, sf_dir, tmp_path):
     )
     pd.testing.assert_frame_equal(got, exp)
     assert len(got) > 0
-
-
-def test_release_ring_broadcasts(docs, spark, sf_dir):
-    """Long-lived sessions can reclaim ring broadcasts explicitly."""
-    points = geojson.point_spans(docs)
-    polys = corpus.polygons(spark, sf_dir)
-    df = pipmod.pip_join(points, polys, broadcast_polys=True)
-    assert df.count() > 0
-    assert pipmod.release_ring_broadcasts() >= 1
-    assert len(pipmod._RING_BROADCASTS) == 0
 
 
 def test_simhash_pairs_complete_recall_vs_brute_force(spark, sf_dir):

@@ -143,53 +143,14 @@ def test_overwrite_replaces_schema_like_reference_copy_flow(spark, tmp_path):
     assert len(t.snapshots()) == 2
 
 
-# --- rectangle fast path ---------------------------------------------------------
-
-
-def test_is_exact_bbox_detection():
-    import numpy as np
-
-    ro = np.array([0, 5])
-    rect = (
-        ro,
-        np.array([0.0, 2.0, 2.0, 0.0, 0.0]),
-        np.array([0.0, 0.0, 1.0, 1.0, 0.0]),
-    )
-    assert pipmod._is_exact_bbox(*rect)
-    # bowtie: same 4 corners, crossing order -> interior != bbox
-    bow = (
-        ro,
-        np.array([0.0, 2.0, 0.0, 2.0, 0.0]),
-        np.array([0.0, 1.0, 1.0, 0.0, 0.0]),
-    )
-    assert not pipmod._is_exact_bbox(*bow)
-    # diamond: diagonal edges
-    dia = (
-        ro,
-        np.array([1.0, 2.0, 1.0, 0.0, 1.0]),
-        np.array([0.0, 1.0, 2.0, 1.0, 0.0]),
-    )
-    assert not pipmod._is_exact_bbox(*dia)
-    # open ring / wrong vertex count
-    open_ring = (
-        ro,
-        np.array([0.0, 2.0, 2.0, 0.0, 0.1]),
-        np.array([0.0, 0.0, 1.0, 1.0, 0.0]),
-    )
-    assert not pipmod._is_exact_bbox(*open_ring)
-    hexa = (
-        np.array([0, 6]),
-        np.array([0.0, 2.0, 2.0, 1.0, 0.0, 0.0]),
-        np.array([0.0, 0.0, 1.0, 1.5, 1.0, 0.0]),
-    )
-    assert not pipmod._is_exact_bbox(*hexa)
+# --- rectangle boundary -------------------------------------------------------
 
 
 def test_rect_fast_path_boundary_matches_ray_cast(spark):
     """Points exactly ON a rectangle edge must get identical verdicts
-    from the fast-path plan (broadcast) and the pure ray-cast plan
-    (shuffle): the fast path only claims the strict interior and
-    routes boundary candidates through the UDF."""
+    from the broadcast and the shuffle plan: both send every
+    bbox-passing candidate, boundary ones included, through the same
+    ray cast."""
     pts = spark.createDataFrame(
         [
             Row(doc_id="in", span_offset=0, lon=5.0, lat=5.0),

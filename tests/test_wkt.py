@@ -70,6 +70,9 @@ def test_wkt_grammar_coverage(spark, txt, gtype, nv):
     "LINESTRING ((30 10, 40 40)",
     "",
     "totally not wkt",
+    "LINESTRING ((1 2), (3 4))",  # parenthesized positions: MULTIPOINT only
+    "POLYGON ((30 10, 40 40, 20 40, 10 20))",  # unclosed ring
+    "MULTIPOLYGON (((30 20, 45 40, 30 20)))",  # ring of 3 positions
 ])
 def test_wkt_malformed_is_error_row_not_crash(spark, txt):
     rows = wkt.wkt_spans(_docs(spark, [txt, "POINT (1 2)"])).collect()
